@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.core.GraftSession
 import graft.runner.AmtPipeline
 
@@ -45,12 +43,7 @@ object AmtRun {
     val silverRoot = positional(0)
     val goldRoot = positional(1)
     val years = positional.drop(2).toSeq
-    val cpus = GraftSession.defaultParallelism
-    val spark = GraftSession.configure(
-      SparkSession.builder().master(s"local[$cpus]").appName("graft-amt"),
-      shufflePartitions = cpus
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(appName = "graft-amt")
     intervalSec match {
       case None if sensorMode =>
         println(s"[amt] file-arrival sensor on $silverRoot over years " +

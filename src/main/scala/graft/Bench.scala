@@ -1,10 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{GraftSession, Lake, SilverWriter}
-import graft.runner.AmtPipeline
+import graft.runner.{AmtPipeline, Measure}
 
 /** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line (driver contract). Each query is forced end-to-end
@@ -13,12 +13,7 @@ import graft.runner.AmtPipeline
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = GraftSession.defaultParallelism
-    val spark = GraftSession.configure(
-      SparkSession.builder().master(s"local[$cpus]").appName("graft-bench"),
-      shufflePartitions = cpus
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(appName = "graft-bench")
 
     // Cache hygiene: several queries persist intermediates (Dedup's shingle
     // and signature frames, the view DAG's memoized frames) and Spark's
@@ -26,13 +21,9 @@ object Bench {
     // a cached plan. Without cleanup, (a) each query runs against executor
     // memory pinned by every query before it, and (b) a query's second
     // timed pass silently reads the first pass's caches — warm numbers
-    // masquerading as plan cost. Dropping all SQL caches and any persisted
-    // RDDs between passes makes every number a cold, isolated measurement.
-    def dropCaches(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.valuesIterator
-        .foreach(_.unpersist(blocking = false))
-    }
+    // masquerading as plan cost. Measure.dropCaches drops all SQL caches
+    // and persisted RDDs and runs a GC between passes, so every number is
+    // a cold, isolated measurement. Every pass below starts with it.
 
     // JVM/codegen warmup: one pass of the full suite at the smallest SF so
     // per-query numbers measure the plan, not first-run JIT + classloading
@@ -41,7 +32,7 @@ object Bench {
     SparkEntry.queries.foreach { case (_, fn) =>
       try fn(spark, "/root/testdata/sf0.001").write.format("noop").mode("overwrite").save()
       catch { case _: Throwable => () }
-      dropCaches()
+      Measure.dropCaches(spark)
     }
     // Prime the OS page cache for the target-SF parquet once, untimed —
     // otherwise the alphabetically-first queries pay every table's cold
@@ -64,8 +55,8 @@ object Bench {
     // next round (round 5's q26 blind spot). Failures surface in the bench
     // JSON under "errors" with a -1.0 sentinel in "queries".
     val benchErrors = scala.collection.mutable.LinkedHashMap[String, String]()
-    def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
-      dropCaches()
+    def timeOne(name: String, fn: (SparkSession, String) => DataFrame): Option[Double] = {
+      Measure.dropCaches(spark)
       val t0 = System.nanoTime()
       try {
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
@@ -84,7 +75,7 @@ object Bench {
     // (timed, reported under "setup"), then time the queries in production
     // shape: read the index, process the batch.
     val setupDir = java.nio.file.Files.createTempDirectory("graft-bench-setup").toString
-    val (overrides, setupTimes) = BenchSetup.materialize(spark, sfDir, setupDir, dropCaches _)
+    val (overrides, setupTimes) = BenchSetup.materialize(spark, sfDir, setupDir)
     val ordered = (SparkEntry.queries ++ overrides).toSeq.sortBy(_._1)
     val sweeps = (1 to 3).map { _ =>
       ordered.map { case (name, fn) => name -> timeOne(name, fn) }.toMap
@@ -106,12 +97,12 @@ object Bench {
     // without re-running anything.
     val maxes = ordered.map { case (name, _) =>
       name -> sweeps.flatMap(_(name)).maxOption.getOrElse(-1.0) }
-    val pipelineSec = pipelineBench(spark, sfDir, dropCaches _)
+    val pipelineSec = pipelineBench(spark, sfDir)
     // Self-defense against in-suite host inflation (the recurring review
     // cost of rounds 3 and 4: apparent regressions that a clean JVM
     // falsifies): any query whose min shifted >1.5x against the previous
     // round's recorded min re-times in a DEDICATED child JVM (the
-    // runner.TimeQuery path, same classpath and JVM flags as this fork),
+    // `Measure time` path, same classpath and JVM flags as this fork),
     // and the samples land in the bench JSON under "dedicated" — the
     // noise-vs-regression call is in the artifact itself, no manual
     // archaeology. The comparison file BENCH_MINS.json is rewritten with
@@ -155,13 +146,12 @@ object Bench {
     * equity DAGs — every other endpoint an empty frame). Setup (deriving and
     * writing the silver JSON) is untimed; the timed region is exactly what a
     * production run pays: silver scan → 41 view plans → gold parquet. */
-  private def pipelineBench(
-      spark: SparkSession, sfDir: String, dropCaches: () => Unit): Double = {
+  private def pipelineBench(spark: SparkSession, sfDir: String): Double = {
     val tmp = java.nio.file.Files.createTempDirectory("graft-bench-pipeline")
     val silver = s"$tmp/silver"
     val gold = s"$tmp/gold"
     deriveSilver(spark, sfDir, silver)
-    dropCaches()
+    Measure.dropCaches(spark)
     val t0 = System.nanoTime()
     val ok =
       try { new AmtPipeline(spark, silver, "1995").writeAll(gold); true }
@@ -170,24 +160,39 @@ object Bench {
         false
       }
     val sec = (System.nanoTime() - t0) / 1e9
-    dropCaches()
+    Measure.dropCaches(spark)
     graft.core.SilverWriter.deleteOnExit(tmp.toString)
     // a crash must not masquerade as a fast run — report a sentinel
     if (ok) sec else -1.0
   }
 
-  /** Derive and write the bench's silver tree from the sf tables —
-    * students/schools/enrollment/calendar/attendance populated (the
-    * spine feeding the deep EWS/chrab/equity DAGs), every other
-    * endpoint an empty frame. Shared by [[pipelineBench]] and
-    * `runner.ConcurrencyProbe`. */
-  def deriveSilver(spark: SparkSession, sfDir: String, silver: String): Unit = {
+  /** Write the bench's silver tree ([[silverFrames]] at one replica) under
+    * `silver/1995/<endpoint>`. Shared by [[pipelineBench]] and
+    * `Measure probe concurrency`. */
+  def deriveSilver(spark: SparkSession, sfDir: String, silver: String): Unit =
+    silverFrames(spark, sfDir).foreach { case (name, df) =>
+      SilverWriter.write(df, s"$silver/1995/$name")
+    }
+
+  /** The bench's silver endpoints derived from the sf tables — students,
+    * schools, enrollment, calendar and attendance populated (the spine
+    * feeding the deep EWS/chrab/equity DAGs), every other endpoint empty.
+    * With `replicas` > 1 the STUDENTS replicate over the fixed school set
+    * (replica r > 0 of student s is `s-r`), the way a district lake
+    * grows, so the hot school's key weight grows with them
+    * (`Measure probe scale`). */
+  def silverFrames(
+      spark: SparkSession, sfDir: String, replicas: Int = 1): Map[String, DataFrame] = {
     val lake = Lake(spark, sfDir)
-    val cust = lake.customer.select(
-      col("c_custkey"), col("c_nationkey"), col("c_name"))
+    val cust = lake.customer
+      .crossJoin(broadcast(spark.range(replicas.toLong).toDF("replica")))
+      .select(col("c_custkey"), col("c_nationkey"), col("c_name"),
+        when(col("replica") === 0, col("c_custkey").cast("string"))
+          .otherwise(concat_ws("-", col("c_custkey"), col("replica")))
+          .as("studentId"))
 
     val students = cust.select(
-      col("c_custkey").cast("string").as("studentUniqueId"),
+      col("studentId").as("studentUniqueId"),
       col("c_name").as("firstName"),
       lit("Doe").as("lastSurname"))
 
@@ -205,7 +210,7 @@ object Bench {
 
     val ssa = cust.select(
       struct(col("c_nationkey").cast("long").as("schoolId")).as("schoolReference"),
-      struct(col("c_custkey").cast("string").as("studentUniqueId")).as("studentReference"),
+      struct(col("studentId").as("studentUniqueId")).as("studentReference"),
       struct(lit(1995L).as("schoolYear")).as("schoolYearTypeReference"),
       lit("1995-01-05").as("entryDate"),
       when(col("c_custkey") % 10 === 0, "1995-01-20")
@@ -229,7 +234,7 @@ object Bench {
     val att = jan.join(cust, col("o_custkey") === col("c_custkey"))
       .select(
         struct(col("c_nationkey").cast("long").as("schoolId")).as("schoolReference"),
-        struct(col("c_custkey").cast("string").as("studentUniqueId")).as("studentReference"),
+        struct(col("studentId").as("studentUniqueId")).as("studentReference"),
         col("o_orderdate").cast("string").as("eventDate"),
         concat(lit("uri://ed-fi.org/AttendanceEventCategoryDescriptor#"),
           element_at(
@@ -238,13 +243,12 @@ object Bench {
             (col("o_orderkey") % 4 + 1).cast("int")))
           .as("attendanceEventCategoryDescriptor"))
 
-    Seq(
+    Map(
       "students" -> students,
       "schools" -> schools,
       "studentSchoolAssociations" -> ssa,
       "calendarDates" -> cal,
-      "studentSchoolAttendanceEvents" -> att
-    ).foreach { case (name, df) => SilverWriter.write(df, s"$silver/1995/$name") }
+      "studentSchoolAttendanceEvents" -> att)
   }
 }
 
@@ -256,6 +260,9 @@ object Bench {
   * bench: a missing minima file or an unspawnable child JVM degrades to an
   * empty "dedicated" map. */
 object BenchRecheck {
+
+  /** Seconds of shift below which a query never counts as an outlier. */
+  private val AbsFloor = 0.25
 
   /** What BENCH_MINS.json records — a RATCHET, `min(prev, thisRun)` per
     * query: floors only ever move down, so one contended-host sweep (this
@@ -280,7 +287,7 @@ object BenchRecheck {
     * (q79/q80/q81/q96) were never re-adjudicated. Pure; VerifySpec. */
   def rankOutliers(
       good: Seq[(String, Double)], prev: Map[String, Double],
-      factor: Double = 1.5, absFloor: Double = 0.25, cap: Int = 10): Seq[String] =
+      factor: Double = 1.5, absFloor: Double = AbsFloor, cap: Int = 10): Seq[String] =
     good.flatMap { case (name, v) =>
       prev.get(name).collect {
         case p if v > factor * p && v - p > absFloor => (name, v / p)
@@ -291,18 +298,20 @@ object BenchRecheck {
     * unit/queries/sf) plus n and n_errors, with "queries" restricted to the
     * `cap` biggest movers vs `prev` floors (by max(r, 1/r), both directions
     * — regressions AND wins are signal) and "vs_mins" carrying each mover's
-    * now/floor ratio. Error messages are truncated and capped so the line
-    * stays under ~2 KB no matter what fails. Pure; VerifySpec pins the
+    * now/floor ratio. A query with no floor yet is ranked against
+    * [[AbsFloor]], the outlier gate's sub-noise bound, and only upward: a new
+    * slow query shows among the movers, a new sub-floor one is no "win".
+    * Error messages are truncated and capped so the
+    * line stays under ~2 KB no matter what fails. Pure; VerifySpec pins the
     * size bound and mover selection. */
   def compactLine(
       total: Double, n: Int, pipelineSec: Double,
       good: Seq[(String, Double)], prev: Map[String, Double],
       errors: Seq[(String, String)], sfDir: String, cap: Int = 15): String = {
-    val movers = good.flatMap { case (name, v) =>
-      prev.get(name).filter(_ > 0).map { p =>
-        val r = v / p
-        (name, v, r, math.max(r, 1.0 / r))
-      }
+    val movers = good.map { case (name, v) =>
+      val floor = prev.get(name).filter(_ > 0)
+      val r = v / floor.getOrElse(AbsFloor)
+      (name, v, r, if (floor.isDefined) math.max(r, 1.0 / r) else r)
     }.sortBy(-_._4).take(cap)
     val qs = movers.map { case (k, v, _, _) => "\"" + k + "\":" + f"$v%.3f" }
       .mkString("{", ",", "}")
@@ -334,7 +343,7 @@ object BenchRecheck {
     }
   }
 
-  /** Run [[graft.runner.TimeQuery]] on `names` in a fresh child JVM with
+  /** Run `graft.runner.Measure time` on `names` in a fresh child JVM with
     * this JVM's classpath and flags; parse its one-line JSON into
     * name → 3 samples. One child covers all names (each still gets a
     * clean-session measurement — the suite-JVM state is what inflates). */
@@ -350,7 +359,7 @@ object BenchRecheck {
       cmd.add(javaBin)
       jvmArgs.forEach(a => cmd.add(a))
       cmd.add("-cp"); cmd.add(sys.props("java.class.path"))
-      cmd.add("graft.runner.TimeQuery")
+      cmd.add("graft.runner.Measure"); cmd.add("time")
       names.foreach(cmd.add)
       val pb = new ProcessBuilder(cmd)
       pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
@@ -377,8 +386,6 @@ object BenchRecheck {
   * derivation-from-scratch there, by design); the bench overrides measure
   * what a production invocation pays per run. */
 object BenchSetup {
-  import org.apache.spark.sql.DataFrame
-
   import graft.ops.{Dedup, Similarity}
 
   /** Materialize q50's near-dup pair list, q54's corpus shingles + band
@@ -387,12 +394,9 @@ object BenchSetup {
     * setup seconds — reported in the bench JSON under `"setup"`, like
     * `pipeline_total`). */
   def materialize(
-      spark: SparkSession, sfDir: String, dir: String, dropCaches: () => Unit
+      spark: SparkSession, sfDir: String, dir: String
   ): (Map[String, (SparkSession, String) => DataFrame], Map[String, Double]) = {
-    def timed(f: => Unit): Double = {
-      dropCaches()
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
+    def timed(f: => Unit): Double = Measure.minOf(spark, 1)(f)
     val docs = Lake(spark, sfDir).documents
     // q50: the pair list is the upstream dedup pass's output, stored in the
     // lake; the operator under time is clustering (pairs → components).

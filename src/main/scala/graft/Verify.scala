@@ -22,12 +22,7 @@ object Verify {
     // single-query checks (the driver always runs the full registry)
     val Array(sfDir, outDir) = args.take(2)
     val prefixes = args.drop(2).headOption.map(_.split(',').toSeq)
-    val cpus = GraftSession.defaultParallelism
-    val spark = GraftSession.configure(
-      SparkSession.builder().master(s"local[$cpus]").appName("graft-verify"),
-      shufflePartitions = cpus
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(appName = "graft-verify")
     new java.io.File(outDir).mkdirs()
     def selected[V](m: Map[String, V]): Map[String, V] = prefixes match {
       case Some(ps) => m.filter { case (k, _) => ps.exists(k.startsWith) }

@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   * next to the input, so the second exchange moves nothing. PlanSpec
   * asserts the single-hash(user)-exchange shape on the executed plans.
   *
-  * Measured (runner.BehaviorScaleProbe, sf0.1 → 10× the users =
+  * Measured (BehaviorScaleProbe, sf0.1 → 10× the users =
   * 100k → 1M events, local[32]): funnel 0.81 → 0.90 s (1.1×),
   * transitions 0.47 → 0.67 s (1.4×), retention 0.36 → 0.65 s (1.8×) —
   * fixed stage setup dominates; the per-row work is one partitioned

@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   * canonicality — one hash shuffle on `fp`, O(1) state per group. The
   * whole pipeline is a single-shuffle pass over the corpus, which is
   * what lets a daily 100 TB refresh run it end-to-end. Measured
-  * (runner.TextScaleProbe, sf0.1 -> 10x = 50k docs, local[32]):
+  * (TextScaleProbe, sf0.1 -> 10x = 50k docs, local[32]):
   * 0.74 s -> 2.00 s (2.7x for 10x data, sublinear).
   *
   * Every stage is individually oracle-gated (q58/q30/q68/q45/q51); q79

@@ -543,7 +543,7 @@ object Dedup {
     * daily should `spark.catalog.clearCache()` (or unpersist) after
     * materializing each day's result, or the per-day frames accumulate.
     *
-    * MEASURED O(batch) (r4 `runner/IncrementalProbe`, sf0.1 documents,
+    * MEASURED O(batch) (r4 IncrementalProbe, sf0.1 documents,
     * parquet-backed corpus artifacts, cold, min-of-3): splitting the same
     * 5k-doc table at three points — corpus 250/batch 4750 → 2.39 s,
     * corpus 4500/batch 500 → 1.80 s, corpus 4900/batch 100 → 1.67 s.
@@ -899,7 +899,7 @@ object Dedup {
     *   - re-assembly is one doc_id shuffle; the per-doc fold collects
     *     only that document's own spans (bounded by document length).
     *
-    * Measured (runner.TextScaleProbe, sf0.1 → 10× = 50k near-dup docs,
+    * Measured (TextScaleProbe, sf0.1 → 10× = 50k near-dup docs,
     * local[32]): 0.77 s → 2.55 s (3.3× for 10× data, with every span
     * shared across all 10 replicas — the worst-case join-back fan-in).
     *

@@ -51,7 +51,7 @@ import graft.views.{AmtView, ViewContext}
   * key set; all shuffles in the refresh plan are delta-sized (the
   * rebuilt slice's own aggregations).
   *
-  * Measured (graft.runner.IncrementalGoldProbe, local[32], min of 3,
+  * Measured (`Measure probe incremental-gold`, local[32], min of 3,
   * cold caches, fixed 1k-student delta; BENCH_NOTES.md): the
   * shuffle-free [[refreshView]] is SCAN-BOUND, not flat — at ×10 corpus
   * (100k → 1M students) the full rebuild grows 1.840 → 8.169 s (4.4×)

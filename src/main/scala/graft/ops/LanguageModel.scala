@@ -34,7 +34,7 @@ import org.apache.spark.sql.functions._
   *   - the per-doc fold collects one doc's OWN probabilities only —
   *     bounded by document length, never by corpus size.
   *
-  * Measured (runner.TextScaleProbe, sf0.1 → 10× = 50k docs, local[32]):
+  * Measured (TextScaleProbe, sf0.1 → 10× = 50k docs, local[32]):
   * train + score 1.08 s → 3.86 s (3.6× for 10× data — the LM join and
   * doc fold both scale linearly; fixed stage setup absorbs the rest).
   */

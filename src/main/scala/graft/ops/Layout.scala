@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   * deeper interleaving buys nothing while widening the sort key.
   *
   * Measured: key computation 0.11 → 0.13 s for 10× rows
-  * (runner.BehaviorScaleProbe — projection-speed, no job structure);
+  * (BehaviorScaleProbe — projection-speed, no job structure);
   * skipping effect asserted from real parquet footers in PlanSpec
   * (b-box: 16/16 files touched a-sorted vs ≤6/16 z-ordered). */
 object Layout {

@@ -116,7 +116,7 @@ object Packing {
     * a straight append. A global `orderBy(random)` — the naive spelling
     * — would funnel 100 TB through a range sort; this never sorts more
     * than one shard, and shards are sized to executor memory by picking
-    * `nShards`. Measured (runner.TextScaleProbe, sf0.1 → 10×, 64
+    * `nShards`. Measured (TextScaleProbe, sf0.1 → 10×, 64
     * shards): 0.13 s → 0.36 s for 10× data.
     *
     * @return input plus `shard` and `shard_pos` (0-based rank inside

@@ -22,7 +22,7 @@ import org.apache.spark.sql.expressions.Window
   *     The q36 oracle takes centroids deterministically (lowest ids);
   *     [[kMeansCentroids]] is the production centroid pass.
   *
-  * MEASURED quality/speed (r4 `runner/RecallProbe`: 10× sf0.1 embeddings
+  * MEASURED quality/speed (r4 RecallProbe: 10× sf0.1 embeddings
   * = 20k vectors in ±3%-perturbed clusters, 50 queries, recall@10 vs
   * [[bruteForceTopK]] ground truth, cold, local[32] — the ANN analogue of
   * the dedup family's 99.9%-recall probe):
@@ -37,7 +37,8 @@ import org.apache.spark.sql.expressions.Window
   * for the centroid-free LSH path with 2-bit multiprobe (its default);
   * SimilaritySpec pins recall floors so a bucketing regression fails CI.
   *
-  * SERVING shape (r5 [[graft.runner.IvfServeProbe]], cluster-partitioned
+  * SERVING shape (r5 IvfServeProbe, retired: BENCH_NOTES "Retired
+  * measurement probes"; cluster-partitioned
   * parquet index built once as setup — 1.7-2.2 s — then query batches
   * against the persisted index): 10 queries 0.58 s vs 100 queries
   * 0.51 s at 1× (ratio 0.87 — fixed stage setup dominates, per-query

@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * injective for text-free-of- content; production tables with
   * binary columns would hash a struct instead.
   *
-  * Measured (runner.TextScaleProbe, sf0.1 -> 10x = 50k docs,
+  * Measured (TextScaleProbe, sf0.1 -> 10x = 50k docs,
   * local[32]): 0.14 s -> 0.22 s for 10x data - hash fold + narrow
   * shuffle, nothing content-width-sized survives to the exchange.
   */
@@ -100,7 +100,7 @@ object Snapshot {
     * exactly one exchange on the executed plan). Ties in `seqCol` are
     * broken by `tieCol` so the ranges are deterministic.
     *
-    * Measured (runner.BehaviorScaleProbe, sf0.1 → 10× the users,
+    * Measured (BehaviorScaleProbe, sf0.1 → 10× the users,
     * local[32]): 0.43 → 0.69 s for 10× data (1.6×).
     */
   def scd2(

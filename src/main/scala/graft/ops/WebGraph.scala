@@ -20,7 +20,8 @@ import org.apache.spark.sql.functions._
   * plan constant-size (the [[Dedup.connectedComponents]] loop
   * discipline).
   *
-  * Measured ([[graft.runner.WebGraphScaleProbe]], sf0.1 pages ×10 with
+  * Measured (WebGraphScaleProbe, retired: BENCH_NOTES "Retired
+  * measurement probes"; sf0.1 pages ×10 with
   * the host universe grown ×10 alongside and each page carrying its
   * document's full text, local[32], warm-then-time — one run, one
   * fixture, so the numbers reproduce together): host_edges 0.35 →
@@ -33,7 +34,7 @@ import org.apache.spark.sql.functions._
   * canonicalization ride the scan, the graph side is state-size-bound
   * exactly as a 1000-executor run needs.
   *
-  * ZIPFIAN skew (r5 [[graft.runner.ZipfSkewProbe]], same 10× geometry
+  * ZIPFIAN skew (r5 ZipfSkewProbe, retired likewise; same 10× geometry
   * but power-law hosts — the hottest host holds 13.5% of all 50k page
   * slots, the real link-graph shape the uniform probe can't exercise):
   * wall times match the uniform probe within host noise (host_edges
@@ -564,7 +565,7 @@ object WebGraph {
     * |frontier-adjacent edges|, never |graph|², and a 1000-executor
     * run shuffles only frontier-sized frames keyed on host.
     *
-    * Measured (runner.BehaviorScaleProbe, local[32]): 4-round BFS over
+    * Measured (BehaviorScaleProbe, local[32]): 4-round BFS over
     * a 40k-edge / 2k-host graph 2.58 s → 10× the hosts at the same
     * out-degree 3.18 s (1.2× — round-count fixed, per-round frames
     * grow, stage setup dominates). */
@@ -687,7 +688,7 @@ object WebGraph {
     * [[hostRank]] and [[trustRank]] separately (WebGraphSpec law) —
     * the integer arithmetic per column is untouched — at roughly half
     * the jobs: one edge preamble, one outdeg aggregate, one join tree
-    * per round. Measured (runner.FusedRankProbe, sf0.1, min of 3,
+    * per round. Measured (FusedRankProbe, sf0.1, min of 3,
     * dedicated JVM): separate loops 4.47 s → fused 2.35 s (1.9×).
     *
     * @return (host, rank_units, trust_units) */
@@ -939,7 +940,8 @@ object WebGraph {
     * engines. Self-loops and duplicate/reverse edges are collapsed
     * first (triangle counting is defined on the simple graph).
     *
-    * Measured ([[graft.runner.WebGraphScaleProbe]], sf0.1, local[32],
+    * Measured (WebGraphScaleProbe, retired: BENCH_NOTES "Retired
+    * measurement probes"; sf0.1, local[32],
     * warm): 10× the pages AND 10× the host universe 0.75 → 1.27 s
     * (1.7× — edge-count-bound, stage setup still dominant), alongside
     * kCore 2.1 → 1.2 s (0.6×: the bigger modular graph is MORE

@@ -159,7 +159,7 @@ final class AmtPipeline(
     * view's long stage chain resolves. Plan construction (`view`) is
     * synchronized (the memoized DAG), the write actions are not.
     *
-    * MEASURED (runner.ConcurrencyProbe, sf0.1 silver tree, local[32],
+    * MEASURED (`Measure probe concurrency`, sf0.1 silver tree, local[32],
     * min of 3, cold caches per run): the full 41-view writeAll takes
     * 13.9 s at parallelism 1, 7.1 s at 2, 4.2 s at 4 (the default —
     * 3.3×), 3.8 s at 8 (3.7×, flattening where the shared EWS/chrab

@@ -1,6 +1,5 @@
 package graft.runner
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 import graft.{SparkEntry, VerifyCore}
@@ -23,11 +22,7 @@ object VerifySubset {
     val names = args.drop(2).toSet
     val unknown = names -- SparkEntry.queries.keySet
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val cpus = GraftSession.defaultParallelism
-    val spark = GraftSession.configure(
-      SparkSession.builder().master(s"local[$cpus]").appName("graft-verify-subset"),
-      shufflePartitions = cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(appName = "graft-verify-subset")
     new java.io.File(outDir).mkdirs()
     val subset = SparkEntry.queries.filter { case (k, _) => names(k) }
     val errors = VerifyCore.runQueries(spark, sfDir, outDir, subset)

@@ -21,7 +21,7 @@ import graft.views.{AmtView, ViewContext}
   * (student, school, day) BEFORE joining the spine, so the spine join
   * stays 1:1 instead of multiplying event rows.
   *
-  * Measured 10× probe (graft.runner.ScaleProbe, sf0.1 derived endpoints,
+  * Measured 10× probe (`Measure probe scale`, sf0.1 derived endpoints,
   * local[32]): replicating students 10× grows the spine from 301,500 to
   * 3,015,000 rows at 1.98 s → 4.98 s (factor 2.52 for 10× the data —
   * sub-linear; the cost center is the final (school, student, day)

@@ -33,7 +33,7 @@ import graft.views.{AmtView, ViewContext}
   * at 100 TB partition by (schoolId, schoolYear): every join here carries
   * schoolId, and the spine key includes the year (see build()).
   *
-  * Measured 10× probe (graft.runner.ScaleProbe, sf0.1 derived endpoints,
+  * Measured 10× probe (`Measure probe scale`, sf0.1 derived endpoints,
   * local[32]): replicating students 10× grows the spine from 388,500 to
   * 3,885,000 rows at 1.68 s → 1.69 s (factor 1.01 — the plan is
   * shuffle-bound on fixed stage setup, not data volume, at this scale);

@@ -1,10 +1,37 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Lake
 import graft.ops.Similarity
 
 class SimilaritySpec extends SparkTestBase {
+
+  /** Original embeddings + (replicas-1) perturbed copies, withNorm shape.
+    * Replica r of vector v gets id v + r*1e6 and components scaled by
+    * (1 + ((r*31 + pos*17) % 13 - 6) / 200) — deterministic, ±3%. */
+  def corpus10x(spark: SparkSession, dir: String, replicas: Int): DataFrame = {
+    val base = Lake(spark, dir).embeddings
+      .select(col("vec_id"), Similarity.asDouble(col("embedding")).as("v"))
+    val rep = spark.range(replicas.toLong).select(col("id").as("replica"))
+    base.crossJoin(broadcast(rep))
+      .select(
+        (col("vec_id") + col("replica") * 1000000L).as("vec_id"),
+        transform(col("v"),
+          (x, pos) => x * (lit(1.0) +
+            ((col("replica") * 31 + pos * 17) % 13 - 6).cast("double") / 200.0))
+          .as("v"))
+      .withColumn("nrm", Similarity.l2Norm(col("v")))
+  }
+
+  /** Fraction of exact top-k pairs the approximate result recovers. */
+  def recallOf(approx: DataFrame, exact: DataFrame): Double = {
+    val hits = approx.select("query_id", "neighbor_id")
+      .join(exact.select("query_id", "neighbor_id"),
+        Seq("query_id", "neighbor_id"), "left_semi").count()
+    hits.toDouble / exact.count()
+  }
 
   test("lshTopK: bucket+multiprobe ANN agrees with brute force on obvious clusters") {
     import testImplicits._
@@ -94,21 +121,20 @@ class SimilaritySpec extends SparkTestBase {
 
   test("ANN recall floor: ivf and lsh recover the exact neighbors on a clustered corpus") {
     import org.apache.spark.sql.functions.col
-    import graft.runner.RecallProbe
     // 4× replicated sf0.001 embeddings (2000 vectors): every original grows
     // a tight ±3%-perturbed cluster — the regime ANN exists for. Floors sit
-    // under the measured recalls (RecallProbe, Similarity scaladoc) with
+    // under the measured recalls (Similarity scaladoc) with
     // margin; a bucketing/probe regression drops recall far below them.
-    val corpus = RecallProbe.corpus10x(spark, sfDir, replicas = 4)
+    val corpus = corpus10x(spark, sfDir, replicas = 4)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val queries = corpus.filter(col("vec_id") < 20)
     val exact = Similarity.bruteForceTopK(corpus, queries, 5)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     exact.count()
     val centroids = Similarity.kMeansCentroids(corpus, k = 16, maxIter = 2)
-    val rIvf = RecallProbe.recallOf(
+    val rIvf = recallOf(
       Similarity.ivfTopK(corpus, centroids, queries, k = 5, nProbe = 2), exact)
-    val rLsh = RecallProbe.recallOf(
+    val rLsh = recallOf(
       Similarity.lshTopK(corpus, queries, k = 5, nPlanes = 6, dim = 64), exact)
     corpus.unpersist(); exact.unpersist()
     assert(rIvf >= 0.9, f"ivf recall@5 regressed: $rIvf%.3f")
@@ -133,10 +159,9 @@ class SimilaritySpec extends SparkTestBase {
 
   test("quantized ANN: recall@5 against exact brute force stays high on clusters") {
     import org.apache.spark.sql.functions.col
-    import graft.runner.RecallProbe
     // int8 keeps ~7 significant bits per dim — on the clustered corpus its
     // top-5 should almost exactly match the float brute force
-    val base = RecallProbe.corpus10x(spark, sfDir, replicas = 4)
+    val base = corpus10x(spark, sfDir, replicas = 4)
     val raw = base.select(col("vec_id"),
       transform(col("v"), x => x.cast("float")).as("embedding"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -145,7 +170,7 @@ class SimilaritySpec extends SparkTestBase {
     val exact = Similarity.bruteForceTopK(corpus, queries, 5)
     val qz = Similarity.quantizeInt8(raw, "vec_id", "embedding")
     val approx = Similarity.quantizedTopK(qz, qz.filter(col("vec_id") < 20), 5)
-    val r = RecallProbe.recallOf(approx, exact)
+    val r = recallOf(approx, exact)
     raw.unpersist()
     assert(r >= 0.9, f"int8 recall@5 regressed: $r%.3f")
   }

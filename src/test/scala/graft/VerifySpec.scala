@@ -103,7 +103,9 @@ class VerifySpec extends SparkTestBase {
         case 2 => 9.0
         case _ => 1.0 + (i % 7) * 0.01
       })
-    }
+    } ++ Seq(
+      "q_new_slow" -> 2.5,   // no floor yet: 10x the 0.25 s floor — a mover
+      "q_new_fast" -> 0.01)  // no floor yet, sub-floor: not a "win"
     val errors = (1 to 8).map(i => s"q_err$i" -> ("boom " * 40))
     val out = BenchRecheck.compactLine(
       total = 431.25, n = 350, pipelineSec = 5.2, good, prev, errors,
@@ -118,6 +120,9 @@ class VerifySpec extends SparkTestBase {
     assert(!out.contains(names(100)), "non-mover leaked into compact line")
     assert(out.contains("\"vs_mins\":{\"" + names(0) + "\":30.00"))
     assert(out.endsWith("\"sf\":\"/root/testdata/sf0.1\"}"))
+    assert(out.contains("\"q_new_slow\":2.500"), "floorless query missing from movers")
+    assert(out.contains("\"q_new_slow\":10.00"))
+    assert(!out.contains("q_new_fast"), "sub-floor new query ranked as a win")
   }
 
   test("unhashableColumns flags decimal/array/map/struct/binary, passes scalars") {

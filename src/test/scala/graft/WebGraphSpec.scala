@@ -1,11 +1,19 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.ops.WebGraph
 
 class WebGraphSpec extends SparkTestBase {
   import testImplicits._
+
+  /** Power-law host index in [1, hosts): floor(hosts^u), u ∈ [0,1). */
+  def zipfIdx(seed: Column, hosts: Int): Column =
+    least(
+      floor(pow(lit(hosts.toDouble),
+        pmod(seed, lit(1000)).cast("double") / 1000.0)).cast("long"),
+      lit(hosts.toLong - 1))
 
   test("extractLinks: absolute http(s) anchors only, casing tolerated, document order") {
     val html =
@@ -415,7 +423,7 @@ class WebGraphSpec extends SparkTestBase {
     // Σ C(outdeg, 2) over the surviving sources, and the mass removed
     // must dwarf what stays (that is what makes the cap a skew guard)
     val edges = spark.range(3000).select(
-      concat(lit("s"), graft.runner.ZipfSkewProbe.zipfIdx(col("id") * 37 + 11, 40))
+      concat(lit("s"), zipfIdx(col("id") * 37 + 11, 40))
         .as("src_host"),
       concat(lit("d"), pmod(col("id"), lit(300))).as("dst_host"))
     val distinctEdges = edges.distinct()
