@@ -43,6 +43,15 @@ object Bench {
       catch { case _: Throwable => () }
     }
 
+    // Setup/operator split for the index-backed dedup queries: q50/q54's
+    // production shape reads a persisted pair list / band index from the
+    // lake, amortized across daily runs — building it is storage cost, not
+    // operator cost. Materialize those artifacts to temp parquet ONCE
+    // (timed, reported under "setup"), then time the queries in production
+    // shape: read the index, process the batch.
+    val setupDir = java.nio.file.Files.createTempDirectory("graft-bench-setup").toString
+    val (overrides, setupTimes, restore) = BenchSetup.materialize(spark, sfDir, setupDir)
+
     // Three timed passes per query, keep the per-query minimum: the plan's
     // steady-state cost, insulated from scheduler/GC/host noise (this box
     // runs other work during rounds, with multi-second bursts). The passes
@@ -56,6 +65,7 @@ object Bench {
     // JSON under "errors" with a -1.0 sentinel in "queries".
     val benchErrors = scala.collection.mutable.LinkedHashMap[String, String]()
     def timeOne(name: String, fn: (SparkSession, String) => DataFrame): Option[Double] = {
+      restore(name)
       Measure.dropCaches(spark)
       val t0 = System.nanoTime()
       try {
@@ -68,14 +78,6 @@ object Bench {
         None
       }
     }
-    // Setup/operator split for the index-backed dedup queries: q50/q54's
-    // production shape reads a persisted pair list / band index from the
-    // lake, amortized across daily runs — building it is storage cost, not
-    // operator cost. Materialize those artifacts to temp parquet ONCE
-    // (timed, reported under "setup"), then time the queries in production
-    // shape: read the index, process the batch.
-    val setupDir = java.nio.file.Files.createTempDirectory("graft-bench-setup").toString
-    val (overrides, setupTimes) = BenchSetup.materialize(spark, sfDir, setupDir)
     val ordered = (SparkEntry.queries ++ overrides).toSeq.sortBy(_._1)
     val sweeps = (1 to 3).map { _ =>
       ordered.map { case (name, fn) => name -> timeOne(name, fn) }.toMap
@@ -144,26 +146,24 @@ object Bench {
     * tree derived from the sf tables (students/schools/enrollment/calendar/
     * attendance populated — the spine that feeds the deep EWS, chrab and
     * equity DAGs — every other endpoint an empty frame). Setup (deriving and
-    * writing the silver JSON) is untimed; the timed region is exactly what a
-    * production run pays: silver scan → 41 view plans → gold parquet. */
+    * writing the silver JSON, once) is untimed; the timed region is exactly
+    * what a production run pays: silver scan → 41 view plans → gold parquet.
+    * Min of 3 cold passes, each into a fresh gold dir, like every query. */
   private def pipelineBench(spark: SparkSession, sfDir: String): Double = {
     val tmp = java.nio.file.Files.createTempDirectory("graft-bench-pipeline")
     val silver = s"$tmp/silver"
-    val gold = s"$tmp/gold"
     deriveSilver(spark, sfDir, silver)
-    Measure.dropCaches(spark)
-    val t0 = System.nanoTime()
-    val ok =
-      try { new AmtPipeline(spark, silver, "1995").writeAll(gold); true }
+    val golds = Iterator.from(1).map(i => s"$tmp/gold$i")
+    val sec =
+      try Measure.minOf(spark, 3)(new AmtPipeline(spark, silver, "1995").writeAll(golds.next()))
       catch { case e: Throwable =>
+        // a crash must not masquerade as a fast run — report a sentinel
         System.err.println(s"[bench] pipeline failed: ${e.getMessage}")
-        false
+        -1.0
       }
-    val sec = (System.nanoTime() - t0) / 1e9
     Measure.dropCaches(spark)
     graft.core.SilverWriter.deleteOnExit(tmp.toString)
-    // a crash must not masquerade as a fast run — report a sentinel
-    if (ok) sec else -1.0
+    sec
   }
 
   /** Write the bench's silver tree ([[silverFrames]] at one replica) under
@@ -389,13 +389,16 @@ object BenchSetup {
   import graft.ops.{Dedup, Similarity}
 
   /** Materialize q50's near-dup pair list, q54's corpus shingles + band
-    * index, and q98's cluster-partitioned IVF assignments under `dir`;
-    * return (timed-query overrides that READ the artifacts, per-query
-    * setup seconds — reported in the bench JSON under `"setup"`, like
-    * `pipeline_total`). */
+    * index, q98's cluster-partitioned IVF assignments and the standing
+    * lakes of q340/q341/q344/q345 under `dir`; return (timed-query
+    * overrides that READ the artifacts, per-query setup seconds — reported
+    * in the bench JSON under `"setup"`, like `pipeline_total` — and
+    * `restore`). `restore(name)` puts back the artifacts a pass of `name`
+    * mutates; call it before every timed pass, outside the timed region. */
   def materialize(
       spark: SparkSession, sfDir: String, dir: String
-  ): (Map[String, (SparkSession, String) => DataFrame], Map[String, Double]) = {
+  ): (Map[String, (SparkSession, String) => DataFrame], Map[String, Double],
+      String => Unit) = {
     def timed(f: => Unit): Double = Measure.minOf(spark, 1)(f)
     val docs = Lake(spark, sfDir).documents
     // q50: the pair list is the upstream dedup pass's output, stored in the
@@ -433,10 +436,12 @@ object BenchSetup {
     // production writes once and amortizes across every batch. Build it
     // ONCE here (timed, reported under "setup"); the timed query is then
     // exactly the per-batch cost: keymap-served scope recovery + bucket-
-    // pruned endpoint/keymap/gold refresh + gold read-back. Re-applying
-    // a fixed batch is idempotent (documented in IncrementalGold), so
-    // three timed passes against one setup measure the same converged
-    // operation. The Verify/oracle path keeps the self-contained shape.
+    // pruned endpoint/keymap/gold refresh + gold read-back. A pass
+    // advances the lake (the keymap first of all), so a second pass
+    // against the same state would time a cheaper, already-converged
+    // refresh: the standing state is written once to `<name>.pristine`
+    // and `restore` copies it back before every pass. The Verify/oracle
+    // path keeps the self-contained shape.
     val prunedGates = Seq[(String, (SparkSession, String) => graft.queries.ViewQueries.PrunedGate)](
       "q340_incremental_school_dim" -> (graft.queries.ViewQueries.q340Gate _),
       "q341_incremental_ews_fact" -> (graft.queries.ViewQueries.q341Gate _),
@@ -446,7 +451,7 @@ object BenchSetup {
       name -> timed {
         val g = gateOf(spark, sfDir)
         graft.queries.ViewQueries.writeStandingState(
-          spark, g.scope, g.scoped, g.shared, s"$dir/$name")
+          spark, g.scope, g.scoped, g.shared, s"$dir/$name.pristine")
       }
     }
     val gateOverrides = prunedGates.map { case (name, gateOf) =>
@@ -457,6 +462,15 @@ object BenchSetup {
           .orderBy(g.orderCols.map(col): _*)
       })
     }.toMap
+    def restore(name: String): Unit = if (gateOverrides.contains(name)) {
+      import org.apache.hadoop.fs.{FileUtil, Path}
+      val conf = spark.sessionState.newHadoopConf()
+      val work = new Path(s"$dir/$name")
+      val fs = work.getFileSystem(conf)
+      fs.delete(work, true)
+      FileUtil.copy(fs, new Path(s"$dir/$name.pristine"), fs, work, false, conf)
+    }
+    gateOverrides.keys.foreach(restore)
 
     val overrides = gateOverrides ++ Map[String, (SparkSession, String) => DataFrame](
       "q50_dedup_clusters" -> ((s, d) => {
@@ -486,6 +500,6 @@ object BenchSetup {
     )
     (overrides,
       Map("q50_dedup_clusters" -> q50Setup, "q54_dedup_incremental" -> q54Setup,
-        "q98_ann_ivf_served" -> q98Setup) ++ gateSetups)
+        "q98_ann_ivf_served" -> q98Setup) ++ gateSetups, restore)
   }
 }

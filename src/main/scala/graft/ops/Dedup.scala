@@ -724,11 +724,9 @@ object Dedup {
     * O(log diameter) rounds, not O(diameter) — a million-hop chain
     * resolves in ~20 rounds (the same doubling idea as the alternating
     * large-star/small-star MapReduce algorithm, Kiveris et al.). Near-dup
-    * graphs are star-ish cliques anyway (2-3 rounds in practice). Per
-    * round the label frame is `localCheckpoint`ed: the convergence check
-    * needs an action anyway, and cutting lineage keeps round k from
-    * replaying rounds 1..k-1 (the same MLlib-style loop discipline as
-    * [[graft.ops.Similarity.kMeansCentroids]]).
+    * graphs are star-ish cliques anyway (2-3 rounds in practice). The
+    * loop is a [[Fixpoint.converge]] (checkpointing, the one count per
+    * round, loud non-convergence).
     *
     * @param nodes one row per node: (`doc_id`)
     * @param pairs undirected edges: (`doc_a`, `doc_b`)
@@ -744,18 +742,20 @@ object Dedup {
     * on: a diameter-64 chain must close in ~log2(64)+2 ≈ 8 rounds, and
     * DedupSpec pins that bound so a regression that drops the jump join
     * (and silently degrades to O(diameter) rounds) fails a test instead of
-    * surfacing as slowness at production scale. */
+    * surfacing as slowness at production scale. Non-convergence throws: a
+    * truncated loop would split real components into several "canonical"
+    * docs and a curation pass would keep duplicates (raise maxIter, or
+    * pre-collapse long chains). */
   def connectedComponentsWithRounds(
       nodes: DataFrame, pairs: DataFrame, maxIter: Int = 20): (DataFrame, Int) = {
     import org.apache.spark.storage.StorageLevel
     val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = nodes.select(col("doc_id"), col("doc_id").as("cluster_id"))
-      .localCheckpoint()
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
+    val (labels, rounds) = Fixpoint.converge("connectedComponents", maxIter,
+        nodes.select(col("doc_id"), col("doc_id").as("cluster_id")),
+        changed = Some(col("cluster_id") =!= col("__old"))) { prev =>
+      val labels = prev.drop("__old")
       val labelType = labels.schema("cluster_id").dataType
       val msgs = edges
         .join(labels.withColumnRenamed("doc_id", "src"), Seq("src"))
@@ -767,31 +767,21 @@ object Dedup {
       // decrease, so min(msgs ∪ jump) ≤ old and a separate `labels` leg
       // in the union is redundant; and max(__old) rides the SAME
       // aggregation, so convergence is read off the checkpointed result
-      // with a plain scan — the per-round next⋈labels shuffle join the
-      // old shape paid just to detect convergence is gone (guide §2.4:
-      // two operations keyed the same way share one exchange). Every
-      // node has exactly one jump row (its label is itself a doc_id), so
-      // no node can drop out of the aggregation.
+      // with a plain scan — no per-round next⋈labels shuffle join just to
+      // detect convergence (guide §2.4: two operations keyed the same way
+      // share one exchange). Every node has exactly one jump row (its
+      // label is itself a doc_id), so no node can drop out of the
+      // aggregation.
       val jump = labels.as("a")
         .join(labels.as("b"), col("a.cluster_id") === col("b.doc_id"))
         .select(col("a.doc_id"), col("b.cluster_id").as("cluster_id"),
           col("a.cluster_id").as("__old"))
-      val next = msgs.union(jump)
+      msgs.union(jump)
         .groupBy("doc_id").agg(
           min("cluster_id").as("cluster_id"), max("__old").as("__old"))
-        .localCheckpoint()
-      converged = next.filter(col("cluster_id") =!= col("__old")).isEmpty
-      labels = next.drop("__old")
-      iter += 1
     }
     edges.unpersist()
-    // a silent non-converged return would split real components into
-    // several "canonical" docs and a curation pass would keep duplicates —
-    // fail loudly instead (raise maxIter, or pre-collapse long chains)
-    if (!converged) throw new IllegalStateException(
-      s"connectedComponents did not converge in $maxIter rounds — " +
-        "graph diameter exceeds maxIter; raise it for chain-shaped graphs")
-    (labels, iter)
+    (labels.drop("__old"), rounds)
   }
 
   /** Duplicate clusters end-to-end: documents + near-dup pairs →

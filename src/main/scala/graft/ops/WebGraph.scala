@@ -218,7 +218,7 @@ object WebGraph {
       edges: DataFrame,
       iterations: Int = 5,
       unit: Long = 1000000000000L
-  ): DataFrame = hostRankFrom(edges, None, iterations, unit)
+  ): DataFrame = hostRankFrom("hostRank", edges, Seq("rank_units" -> None), iterations, unit)
 
   /** [[hostRank]] warm-started from a previous rank state — the daily
     * refresh path: after folding the day's edge deltas into the graph
@@ -236,7 +236,8 @@ object WebGraph {
       seed: DataFrame,
       iterations: Int = 2,
       unit: Long = 1000000000000L
-  ): DataFrame = hostRankFrom(edges, Some(seed), iterations, unit)
+  ): DataFrame = hostRankFrom("hostRankWarmStart", edges, Seq("rank_units" -> None),
+    iterations, unit, warm = Some(seed))
 
   /** TrustRank (Gyöngyi, Garcia-Molina & Pedersen, VLDB 2004): the
     * same integer fixed-point propagation as [[hostRank]], but teleport
@@ -258,7 +259,7 @@ object WebGraph {
       iterations: Int = 5,
       unit: Long = 1000000000000L
   ): DataFrame =
-    hostRankFrom(edges, None, iterations, unit, Some(seeds))
+    hostRankFrom("trustRank", edges, Seq("rank_units" -> Some(seeds)), iterations, unit)
 
   /** Normalized (eAll, e, hosts) for the graph algorithms — ONE copy
     * of the edge preamble shared by [[hostRankFrom]] and [[hits]]. The
@@ -284,68 +285,75 @@ object WebGraph {
     (eAll, e, hosts)
   }
 
+  /** The integer damping loop behind [[hostRank]], [[hostRankWarmStart]],
+    * [[trustRank]] and [[rankAndTrust]]: one rank column per entry of
+    * `ranks`, all carried in ONE frame so a round pays one edge join and
+    * one aggregate however many columns ride it. Each column names its
+    * teleport vector: `None` is uniform `unit div n` (PageRank),
+    * `Some(seeds)` is `unit div |seeds ∩ hosts|` on seed hosts and 0
+    * elsewhere (TrustRank). `warm` starts every column from a previous
+    * state's same-named column; hosts it lacks start at their teleport
+    * share, exactly like a cold round 0. */
   private def hostRankFrom(
+      op: String,
       edges: DataFrame,
-      seed: Option[DataFrame],
+      ranks: Seq[(String, Option[DataFrame])],
       iterations: Int,
       unit: Long,
-      trustSeeds: Option[DataFrame] = None
+      warm: Option[DataFrame] = None
   ): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1: $iterations")
     import org.apache.spark.storage.StorageLevel
+    val names = ranks.map(_._1)
+    val cols = names.indices
     val (eAll, e, hosts) = edgeGraph(edges)
     val n = hosts.count() // the one driver action: a single long
     if (n == 0) { // no linked hosts: the empty graph, not a 1/0 crash
       eAll.unpersist(); e.unpersist(); hosts.unpersist()
-      return hosts.select(col("host"), lit(0L).as("rank_units"))
+      return hosts.select(col("host") +: names.map(c => lit(0L).as(c)): _*)
     }
-    val base = unit / n   // integer division, mirrored by the oracle
-    // per-host teleport vector: uniform `base` for PageRank; for
-    // TrustRank `unit div |seeds ∩ hosts|` on seed hosts, 0 elsewhere.
-    // One (host, long) frame — broadcastable like the ranks themselves.
-    val tele = (trustSeeds match {
-      case None => hosts.select(col("host"), lit(base).as("tele"))
-      case Some(s) =>
+    // one (host, tele_i) column per rank — broadcastable like the ranks
+    val withSeeds = ranks.zipWithIndex.foldLeft(hosts) {
+      case (acc, ((_, Some(s)), i)) =>
         val sIn = hosts.join(
           s.select(col("host").cast("string").as("host")).distinct(),
           Seq("host"), "left_semi")
         val nS = sIn.count()
-        require(nS > 0, "trustRank: no seed host present in the graph")
-        hosts.join(sIn.select(col("host"), lit(unit / nS).as("__t")),
+        require(nS > 0, s"$op: no seed host present in the graph")
+        acc.join(sIn.select(col("host"), lit(unit / nS).as(s"__t$i")),
           Seq("host"), "left")
-          .select(col("host"), coalesce(col("__t"), lit(0L)).as("tele"))
-    }).persist(StorageLevel.MEMORY_AND_DISK)
+      case (acc, _) => acc
+    }
+    val tele = withSeeds.select(col("host") +: cols.map { i =>
+      (if (ranks(i)._2.isEmpty) lit(unit / n) // integer division, as the oracle
+        else coalesce(col(s"__t$i"), lit(0L))).as(s"tele_$i")
+    }: _*).persist(StorageLevel.MEMORY_AND_DISK)
     val outdeg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    var ranks = (seed match {
-      case None => tele.select(col("host"), col("tele").as("rank_units"))
-      case Some(prev) => // warm start; unseeded (new) hosts get the
-        // teleport share, exactly like a cold round 0
-        tele.join(
-          prev.select(col("host"), col("rank_units").as("__seed")),
-          Seq("host"), "left")
-          .select(col("host"),
-            coalesce(col("__seed"), col("tele")).as("rank_units"))
-    }).localCheckpoint()
-    for (_ <- 1 to iterations) {
+    val start = warm.fold(tele)(prev => tele.join(
+      prev.select(col("host") +: cols.map(i => col(names(i)).as(s"__seed$i")): _*),
+      Seq("host"), "left"))
+    val init = start.select(col("host") +: cols.map { i =>
+      (if (warm.isDefined) coalesce(col(s"__seed$i"), col(s"tele_$i"))
+        else col(s"tele_$i")).as(names(i))
+    }: _*).localCheckpoint()
+    val out = (1 to iterations).foldLeft(init) { (cur, _) =>
       val contribs = e
-        .join(ranks, e("src") === ranks("host"))
+        .join(cur, e("src") === cur("host"))
         .join(outdeg, "src")
-        .select(col("dst").as("host"),
-          expr("rank_units div outdeg").as("c"))
+        .select(col("dst").as("host") +:
+          cols.map(i => expr(s"${names(i)} div outdeg").as(s"c$i")): _*)
         .groupBy("host")
-        .agg(sum("c").as("in_sum"))
-      ranks = tele
+        .agg(sum("c0").as("in0"), cols.tail.map(i => sum(s"c$i").as(s"in$i")): _*)
+      tele
         .join(contribs, Seq("host"), "left")
-        .select(col("host"),
-          (expr("(15 * tele) div 100") +
-            expr("(85 * coalesce(in_sum, 0L)) div 100")).as("rank_units"))
+        .select(col("host") +: cols.map { i =>
+          (expr(s"(15 * tele_$i) div 100") +
+            expr(s"(85 * coalesce(in$i, 0L)) div 100")).as(names(i))
+        }: _*)
         .localCheckpoint()
     }
-    eAll.unpersist()
-    e.unpersist()
-    hosts.unpersist()
-    tele.unpersist()
-    ranks
+    eAll.unpersist(); e.unpersist(); hosts.unpersist(); tele.unpersist()
+    out
   }
 
   /** HITS hubs & authorities (Kleinberg, JACM 1999) in integer
@@ -565,7 +573,8 @@ object WebGraph {
     * |frontier-adjacent edges|, never |graph|², and a 1000-executor
     * run shuffles only frontier-sized frames keyed on host.
     *
-    * Measured (BehaviorScaleProbe, local[32]): 4-round BFS over
+    * Measured (BehaviorScaleProbe, retired: BENCH_NOTES "Retired
+    * measurement probes"; local[32]): 4-round BFS over
     * a 40k-edge / 2k-host graph 2.58 s → 10× the hosts at the same
     * out-degree 3.18 s (1.2× — round-count fixed, per-round frames
     * grow, stage setup dominates). */
@@ -688,8 +697,9 @@ object WebGraph {
     * [[hostRank]] and [[trustRank]] separately (WebGraphSpec law) —
     * the integer arithmetic per column is untouched — at roughly half
     * the jobs: one edge preamble, one outdeg aggregate, one join tree
-    * per round. Measured (FusedRankProbe, sf0.1, min of 3,
-    * dedicated JVM): separate loops 4.47 s → fused 2.35 s (1.9×).
+    * per round. Measured (FusedRankProbe, retired: BENCH_NOTES "Retired
+    * measurement probes"; sf0.1, min of 3, dedicated JVM): separate
+    * loops 4.47 s → fused 2.35 s (1.9×).
     *
     * @return (host, rank_units, trust_units) */
   def rankAndTrust(
@@ -697,52 +707,8 @@ object WebGraph {
       seeds: DataFrame,
       iterations: Int = 5,
       unit: Long = 1000000000000L
-  ): DataFrame = {
-    require(iterations >= 1, s"iterations must be >= 1: $iterations")
-    import org.apache.spark.storage.StorageLevel
-    val (eAll, e, hosts) = edgeGraph(edges)
-    val n = hosts.count()
-    if (n == 0) {
-      eAll.unpersist(); e.unpersist(); hosts.unpersist()
-      return hosts.select(col("host"), lit(0L).as("rank_units"),
-        lit(0L).as("trust_units"))
-    }
-    val base = unit / n
-    val sIn = hosts.join(
-      seeds.select(col("host").cast("string").as("host")).distinct(),
-      Seq("host"), "left_semi")
-    val nS = sIn.count()
-    require(nS > 0, "rankAndTrust: no seed host present in the graph")
-    val tele = hosts
-      .join(sIn.select(col("host"), lit(unit / nS).as("__t")), Seq("host"), "left")
-      .select(col("host"), lit(base).as("tele_r"),
-        coalesce(col("__t"), lit(0L)).as("tele_t"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val outdeg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    var ranks = tele.select(col("host"),
-      col("tele_r").as("rank_units"), col("tele_t").as("trust_units"))
-      .localCheckpoint()
-    for (_ <- 1 to iterations) {
-      val contribs = e
-        .join(ranks, e("src") === ranks("host"))
-        .join(outdeg, "src")
-        .select(col("dst").as("host"),
-          expr("rank_units div outdeg").as("cr"),
-          expr("trust_units div outdeg").as("ct"))
-        .groupBy("host")
-        .agg(sum("cr").as("in_r"), sum("ct").as("in_t"))
-      ranks = tele
-        .join(contribs, Seq("host"), "left")
-        .select(col("host"),
-          (expr("(15 * tele_r) div 100") +
-            expr("(85 * coalesce(in_r, 0L)) div 100")).as("rank_units"),
-          (expr("(15 * tele_t) div 100") +
-            expr("(85 * coalesce(in_t, 0L)) div 100")).as("trust_units"))
-        .localCheckpoint()
-    }
-    eAll.unpersist(); e.unpersist(); hosts.unpersist(); tele.unpersist()
-    ranks
-  }
+  ): DataFrame = hostRankFrom("rankAndTrust", edges,
+    Seq("rank_units" -> None, "trust_units" -> Some(seeds)), iterations, unit)
 
   /** [[spamMass]] over [[rankAndTrust]]'s fused output — the
     * production composition: one loop, then the ppm arithmetic. */
@@ -949,19 +915,8 @@ object WebGraph {
     * rounds — iterative cost tracks peel depth, not graph size). */
   def triangles(edges: DataFrame): DataFrame = {
     import org.apache.spark.storage.StorageLevel
-    // canonical simple undirected edges: (a < b), self-loops dropped
-    val und = edges
-      .select(col("src_host").cast("string").as("s"),
-        col("dst_host").cast("string").as("d"))
-      .filter(col("s") =!= "" && col("d") =!= "" && col("s") =!= col("d"))
-      .select(least(col("s"), col("d")).as("a"),
-        greatest(col("s"), col("d")).as("b"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val deg = und.select(col("a").as("host"))
-      .union(und.select(col("b").as("host")))
-      .groupBy("host").agg(count(lit(1)).as("degree"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val und = undirectedEdges(edges).persist(StorageLevel.MEMORY_AND_DISK)
+    val deg = degrees(und, "degree").persist(StorageLevel.MEMORY_AND_DISK)
     // orient low-rank → high-rank, rank = (degree, host) lexicographic
     val withDeg = und
       .join(deg.select(col("host").as("a"), col("degree").as("da")), Seq("a"))
@@ -999,6 +954,24 @@ object WebGraph {
     materialized
   }
 
+  /** The canonical simple undirected edge list of [[triangles]], [[kCore]]
+    * and [[kTruss]]: one (a, b) row per host pair with a < b — empty hosts
+    * and self-loops dropped, duplicate and reverse edges collapsed. */
+  private def undirectedEdges(edges: DataFrame): DataFrame =
+    edges
+      .select(col("src_host").cast("string").as("s"),
+        col("dst_host").cast("string").as("d"))
+      .filter(col("s") =!= "" && col("d") =!= "" && col("s") =!= col("d"))
+      .select(least(col("s"), col("d")).as("a"),
+        greatest(col("s"), col("d")).as("b"))
+      .distinct()
+
+  /** (host, `name`): every host's degree in an [[undirectedEdges]] list. */
+  private def degrees(und: DataFrame, name: String): DataFrame =
+    und.select(col("a").as("host"))
+      .union(und.select(col("b").as("host")))
+      .groupBy("host").agg(count(lit(1)).as(name))
+
   /** k-core decomposition by iterative peeling: repeatedly delete every
     * host whose degree in the CURRENT subgraph is < k until the
     * subgraph is stable; what survives is the k-core — the standard
@@ -1006,58 +979,27 @@ object WebGraph {
     * cores, community backbones all start from it). Returns each
     * surviving host with its degree inside the core.
     *
-    * Loop discipline is [[crawlDepth]]'s: per round ONE degree
-    * aggregation keyed on host + one semi-join filtering the edge list,
-    * both `localCheckpoint`ed so lineage stays flat; one scalar count
-    * drives termination. Rounds are bounded by the peel depth of the
-    * graph (typically ≪ |V|; `maxIter` guards pathological chains
-    * loudly rather than spinning). Per-round cost is |surviving edges|
-    * — monotonically shrinking — and state is (host, long) rows, the
-    * shape that holds on a 1000-executor graph. */
+    * The peel is a [[Fixpoint.converge]] over the edge set: per round ONE
+    * degree aggregation keyed on host + one semi-join filtering the edge
+    * list. Rounds are bounded by the peel depth of the graph (typically
+    * ≪ |V|; `maxIter` guards pathological chains loudly rather than
+    * spinning). Per-round cost is |surviving edges| — monotonically
+    * shrinking — and state is (host, long) rows, the shape that holds on
+    * a 1000-executor graph. */
   def kCore(edges: DataFrame, k: Int, maxIter: Int = 30): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
-    val und0 = edges
-      .select(col("src_host").cast("string").as("s"),
-        col("dst_host").cast("string").as("d"))
-      .filter(col("s") =!= "" && col("d") =!= "" && col("s") =!= col("d"))
-      .select(least(col("s"), col("d")).as("a"),
-        greatest(col("s"), col("d")).as("b"))
-      .distinct()
-    var und = und0.localCheckpoint(false)
-    // carry the edge count across rounds: round k's input count IS
-    // round k-1's output count, so re-counting the previous checkpoint
-    // every round was a pure extra job (r12, one count job per round);
-    // the lazy checkpoint makes this count the materializing job too
-    var undCount = und.count()
-    var pruned = 1L
-    var rounds = 0
-    while (pruned > 0 && rounds < maxIter) {
-      val deg = und.select(col("a").as("host"))
-        .union(und.select(col("b").as("host")))
-        .groupBy("host").agg(count(lit(1)).as("core_degree"))
-        .localCheckpoint()
-      val keep = deg.filter(col("core_degree") >= k)
-      // lazy checkpoint: the count is the single materializing action
-      // (full scan, every partition persisted) — the eager checkpoint's
-      // internal count was a second job per round (r13, guide §2.4)
-      val next = und
+    val (core, _) = Fixpoint.converge("kCore", maxIter, undirectedEdges(edges)) { und =>
+      // eager: both semi-join legs read the degrees
+      val keep = degrees(und, "core_degree").localCheckpoint()
+        .filter(col("core_degree") >= k)
+      und
         .join(keep.select(col("host").as("a")), Seq("a"), "left_semi")
         .join(keep.select(col("host").as("b")), Seq("b"), "left_semi")
         .select("a", "b")
-        .localCheckpoint(false)
-      val nextCount = next.count()
-      pruned = undCount - nextCount
-      und = next
-      undCount = nextCount
-      rounds += 1
     }
-    require(pruned == 0,
-      s"kCore did not converge in $maxIter rounds (peel depth exceeded)")
-    // final degrees over the stable subgraph (deg was computed pre-peel
-    // in the last productive round; recompute on the fixed point)
-    und.select(col("a").as("host"))
-      .union(und.select(col("b").as("host")))
-      .groupBy("host").agg(count(lit(1)).as("core_degree"))
+    // the last round's degrees were taken before its peel; recount on
+    // the fixed point
+    degrees(core, "core_degree")
   }
 
   /** k-truss decomposition — [[kCore]]'s cohesion test upgraded from
@@ -1067,8 +1009,7 @@ object WebGraph {
     * truss demands mutual neighborhoods — the tightest standard
     * definition of a community core short of cliques, and the
     * link-farm shape (dense mutual rings) that degree screens miss.
-    * Same peel loop discipline as [[kCore]] (per-round localCheckpoint,
-    * scalar-only driver traffic, loud non-convergence); each round
+    * The peel is a [[Fixpoint.converge]] like [[kCore]]'s; each round
     * recounts support with the [[triangles]]-style wedge join on the
     * CANONICAL (a<b) edge list — candidates only, never all pairs —
     * then semi-joins the survivors. Returns the fixpoint edges with
@@ -1087,32 +1028,11 @@ object WebGraph {
         .union(tri.select(col("y").as("a"), col("z").as("b")))
         .groupBy("a", "b").agg(count(lit(1)).as("sup"))
     }
-    var und = edges
-      .select(col("src_host").cast("string").as("s"),
-        col("dst_host").cast("string").as("d"))
-      .filter(col("s") =!= "" && col("d") =!= "" && col("s") =!= col("d"))
-      .select(least(col("s"), col("d")).as("a"),
-        greatest(col("s"), col("d")).as("b"))
-      .distinct()
-      .localCheckpoint(false)
-    var undCount = und.count() // carried across rounds, same as kCore
-    var pruned = 1L
-    var rounds = 0
-    while (pruned > 0 && rounds < maxIter) {
-      // lazy checkpoint + count = one materializing job (same as kCore)
-      val next = und.join(
-          support(und).filter(col("sup") >= k - 2).select("a", "b"),
-          Seq("a", "b"), "left_semi")
-        .localCheckpoint(false)
-      val nextCount = next.count()
-      pruned = undCount - nextCount
-      und = next
-      undCount = nextCount
-      rounds += 1
+    val (truss, _) = Fixpoint.converge("kTruss", maxIter, undirectedEdges(edges)) { und =>
+      und.join(support(und).filter(col("sup") >= k - 2).select("a", "b"),
+        Seq("a", "b"), "left_semi")
     }
-    require(pruned == 0,
-      s"kTruss did not converge in $maxIter rounds (peel depth exceeded)")
-    und.join(support(und), Seq("a", "b"))
+    truss.join(support(truss), Seq("a", "b"))
   }
 
   def canonicalizeUrl(url: Column): Column = {
@@ -1331,14 +1251,15 @@ object WebGraph {
     *      backward reachability = mutual reachability);
     *   4. resolved SCCs leave the graph; repeat on the remainder.
     * Every step is a join + groupBy over (host, color) frames —
-    * Pregel-shaped, no driver-side adjacency, per-step localCheckpoint
-    * keeps lineage flat; driver state is per-round scalar counts only.
-    * Rounds are capped and non-convergence is loud (the q50 discipline).
+    * Pregel-shaped, no driver-side adjacency; both inner loops are
+    * [[Fixpoint.converge]]s, so driver state is per-round scalar counts
+    * only. Rounds are capped and non-convergence is loud.
     * Self-loops are dropped up front (a node is trivially in its own
     * SCC); isolated or acyclic nodes resolve as singleton SCCs labeled
     * by themselves. The SCC id is the LARGEST member host id (the pivot
     * — max-label is what the forward pass computes — MEASURED
-    * (AnalyticsScaleProbe, 10× docs over a replica-invariant host
+    * (AnalyticsScaleProbe, retired: BENCH_NOTES "Retired measurement
+    * probes"; 10× docs over a replica-invariant host
     * graph): 1.5×, the edge-dedup scan only, fixpoint rounds constant;
     * the sf0.1 fixture's ~2.9 s floor is driver/job overhead on ~15
     * tiny fixpoint jobs, not data cost; q108's weak
@@ -1353,10 +1274,8 @@ object WebGraph {
       .distinct()
     val hosts = eAll.select(col("src").as("host"))
       .union(eAll.select(col("dst").as("host"))).distinct()
-    // lazy local checkpoints throughout this operator (r13, guide §2.4
-    // finish): each frame's single full-scan count both materializes the
-    // checkpoint and answers the loop question — the eager checkpoints
-    // ran their own count jobs, one extra job per round/frame
+    // the outer loop keeps [[Fixpoint]]'s discipline by hand: lazy marks,
+    // materialized by the full-scan counts it needs anyway
     var remaining = hosts.localCheckpoint(false)
     var eRem = eAll.filter(col("src") =!= col("dst"))
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -1370,29 +1289,20 @@ object WebGraph {
       // The color leg carries each host's OLD color through the same
       // aggregation (the Dedup.connectedComponents r12 fusion): colors
       // only grow, so max(__old) is the old color and convergence is a
-      // plain scan of the checkpointed result — the per-round
-      // next⋈color shuffle join the old shape paid is gone (guide §2.4).
-      var color = remaining.select(col("host"), col("host").as("color"))
-        .localCheckpoint(false)
-      var changed = 1L
-      var inner = 0
-      while (changed > 0 && inner < maxInner) {
-        inner += 1
-        val next = color.select(col("host"), col("color"),
-            col("color").as("__old"))
+      // plain scan of the round's frame — no per-round next⋈color
+      // shuffle join (guide §2.4).
+      val (forward, _) = Fixpoint.converge("SCC color propagation", maxInner,
+          remaining.select(col("host"), col("host").as("color")),
+          changed = Some(col("color") =!= col("__old"))) { prev =>
+        val color = prev.drop("__old")
+        color.select(col("host"), col("color"), col("color").as("__old"))
           .union(eRem.join(color.withColumnRenamed("host", "src"), "src")
             .select(col("dst").as("host"), col("color"),
               lit(null).cast("string").as("__old")))
           .groupBy("host").agg(
             max(col("color")).as("color"), max(col("__old")).as("__old"))
-          .localCheckpoint(false)
-        // the single per-round job: full-scan count materializes the
-        // checkpoint AND reads convergence
-        changed = next.filter(col("color") =!= col("__old")).count()
-        color = next.drop("__old")
       }
-      require(changed == 0,
-        s"SCC color propagation did not converge in $maxInner rounds")
+      val color = forward.drop("__old")
       // 2+3. pivots, then backward reachability inside the color class.
       val colored = eRem
         .join(color.select(col("host").as("src"), col("color").as("sc")), "src")
@@ -1400,30 +1310,22 @@ object WebGraph {
         .filter(col("sc") === col("dc"))
         .select(col("src"), col("dst"), col("sc").as("color"))
         .localCheckpoint(false)
-      var marked = color.filter(col("host") === col("color"))
-        .localCheckpoint(false)
-      var grew = 1L
-      inner = 0
-      while (grew > 0 && inner < maxInner) {
-        inner += 1
-        // same fusion as the forward pass: membership in the previous
-        // round rides the aggregation (groupBy replaces the distinct —
-        // same shuffle), so "did the marked set grow" is a scan, not
-        // two count jobs over both checkpoints
-        val next = marked.select(col("host"), col("color"),
-            lit(1L).as("__old"))
+      // same fusion as the forward pass: membership in the previous
+      // round rides the aggregation (groupBy replaces the distinct —
+      // same shuffle), so "did the marked set grow" is a scan, not two
+      // count jobs over both frames
+      val (marked, _) = Fixpoint.converge("SCC backward sweep", maxInner,
+          color.filter(col("host") === col("color")),
+          changed = Some(col("__old").isNull)) { prev =>
+        val marked = prev.drop("__old")
+        marked.select(col("host"), col("color"), lit(1L).as("__old"))
           .union(colored
             .join(marked.select(col("host").as("dst"), col("color")),
               Seq("dst", "color"))
             .select(col("src").as("host"), col("color"),
               lit(null).cast("long").as("__old")))
           .groupBy("host", "color").agg(max(col("__old")).as("__old"))
-          .localCheckpoint(false)
-        grew = next.filter(col("__old").isNull).count()
-        marked = next.drop("__old")
       }
-      require(grew == 0,
-        s"SCC backward sweep did not converge in $maxInner rounds")
       // 4. bank the resolved SCCs; shrink the graph.
       // result is only CONSUMED at the end (or unioned next round): a
       // lazy mark cuts lineage without spending a per-round job on it

@@ -555,6 +555,24 @@ class WebGraphSpec extends SparkTestBase {
     assert(out == Map("a" -> "a", "b" -> "b", "c" -> "c", "d" -> "d"))
   }
 
+  test("stronglyConnectedComponents: an inner loop past maxInner fails loudly") {
+    // an 8-cycle: the max color crawls one hop per round, 8 rounds forward
+    val ring = (1 to 8).map(i => (s"h$i", s"h${i % 8 + 1}"))
+    val cycle = ring.toDF("src_host", "dst_host")
+    val fwd = intercept[IllegalStateException](
+      WebGraph.stronglyConnectedComponents(cycle, maxInner = 4).collect())
+    assert(fwd.getMessage.contains("SCC color propagation") &&
+      fwd.getMessage.contains("4 rounds"))
+    // the same ring with a hub fan-out from the pivot h8: the forward pass
+    // closes in 2 rounds, the backward sweep still walks the ring
+    val fanned = (ring ++ (1 to 7).map(i => ("h8", s"h$i"))).toDF("src_host", "dst_host")
+    val bwd = intercept[IllegalStateException](
+      WebGraph.stronglyConnectedComponents(fanned, maxInner = 4).collect())
+    assert(bwd.getMessage.contains("SCC backward sweep"))
+    assert(WebGraph.stronglyConnectedComponents(fanned, maxInner = 9)
+      .collect().forall(_.getString(1) == "h8"))
+  }
+
   test("kTruss: the peel cascades — one support pass is not enough") {
     // two triangles sharing edge B-C: supports are {BC: 2, others: 1}.
     // k=4 needs support >= 2: the first peel keeps only B-C, whose
@@ -568,6 +586,8 @@ class WebGraphSpec extends SparkTestBase {
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     assert(t3 == Map(("A", "B") -> 1L, ("B", "C") -> 2L, ("A", "C") -> 1L,
       ("C", "D") -> 1L, ("B", "D") -> 1L))
+    // the k=4 cascade takes two productive rounds plus the converged one
+    intercept[IllegalStateException](WebGraph.kTruss(chain, k = 4, maxIter = 2))
   }
 
   test("rankAndTrust: the fused loop equals separate hostRank/trustRank bit-for-bit") {
@@ -657,6 +677,8 @@ class WebGraphSpec extends SparkTestBase {
     assert(WebGraph.kCore(edges, k = 3).count() == 0)
     // k=1 on the simple graph: everything with an edge survives as-is
     assert(WebGraph.kCore(edges, k = 1).count() == 9)
+    // one round cannot peel the chain: loud failure, not a partial core
+    intercept[IllegalStateException](WebGraph.kCore(edges, k = 2, maxIter = 1))
   }
 
   test("randomWalks: hash-deterministic hops over sorted neighbors; dead ends hold") {
