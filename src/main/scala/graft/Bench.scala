@@ -39,7 +39,7 @@ object Bench {
     // first read and the per-query numbers conflate disk with plan cost.
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "events", "documents", "embeddings").foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").write.format("noop").mode("overwrite").save()
+      try Lake.open(spark, s"$sfDir/$t.parquet").write.format("noop").mode("overwrite").save()
       catch { case _: Throwable => () }
     }
 
@@ -474,13 +474,13 @@ object BenchSetup {
 
     val overrides = gateOverrides ++ Map[String, (SparkSession, String) => DataFrame](
       "q50_dedup_clusters" -> ((s, d) => {
-        val pairs = s.read.parquet(s"$dir/q50_pairs")
+        val pairs = Lake.open(s, s"$dir/q50_pairs")
         Dedup.dupClusters(Lake(s, d).documents.select("doc_id"), pairs)
           .orderBy("doc_id")
       }),
       "q54_dedup_incremental" -> ((s, d) => {
-        val corpusSh = s.read.parquet(s"$dir/q54_corpus_shingles")
-        val index = s.read.parquet(s"$dir/q54_index_bands")
+        val corpusSh = Lake.open(s, s"$dir/q54_corpus_shingles")
+        val index = Lake.open(s, s"$dir/q54_index_bands")
         val newSh = Dedup.shingles(
           Lake(s, d).documents.filter(col("doc_id") >= 250), "doc_id", "text", 3)
         Dedup.incrementalMinhash(index, corpusSh, newSh, 0.8)
@@ -492,7 +492,7 @@ object BenchSetup {
         val centroids = corpus.filter(col("vec_id") < 16)
         val queries = corpus.filter(col("vec_id") < 8)
         Similarity.ivfTopKFromAssigned(
-          s.read.parquet(s"$dir/q98_ivf_index"), centroids, queries,
+          Lake.open(s, s"$dir/q98_ivf_index"), centroids, queries,
           k = 5, nProbe = 2)
           .select("query_id", "neighbor_id", "cos", "rank")
           .orderBy("query_id", "rank")

@@ -77,7 +77,7 @@ object Compaction {
     val old = new Path(path + ".old")
     if (fs.exists(tmp)) fs.delete(tmp, true)
     if (fs.exists(old)) fs.delete(old, true)
-    layout(spark.read.parquet(path), parts)
+    layout(Lake.open(spark, path), parts)
       .write.mode("overwrite").parquet(tmp.toString)
     // Hadoop FileSystem.rename reports failure by RETURNING FALSE, not
     // throwing — unchecked, a failed rename-aside would report success

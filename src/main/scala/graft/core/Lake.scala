@@ -1,6 +1,10 @@
 package graft.core
 
+import scala.util.Try
+
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
 
 /** Thin accessor over a directory of parquet tables (one file/dir per table),
   * the layout of both the driver's synthetic test data
@@ -8,10 +12,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * "gold" layer (one parquet per view per school year,
   * reference parquet/Common/pandasWrapper.py:128-135).
   *
-  * Reads are plain `spark.read.parquet`, so Catalyst keeps full pushdown:
-  * filters and column pruning reach the scan (`PushedFilters`/`ReadSchema`),
-  * which is the property that matters at 100 TB — a query that touches 2 of
-  * 16 lineitem columns must only read 2 column chunks.
+  * Tables open through [[Lake.open]]: one footer read on the driver, then
+  * `spark.read.schema(s).parquet`. Catalyst keeps full pushdown: filters
+  * and column pruning reach the scan (`PushedFilters`/`ReadSchema`), which
+  * is the property that matters at 100 TB — a query that touches 2 of 16
+  * lineitem columns must only read 2 column chunks.
   */
 final case class Lake(spark: SparkSession, dir: String) {
   /** One normalization point for the whole engine: every TIMESTAMP_NTZ
@@ -25,7 +30,7 @@ final case class Lake(spark: SparkSession, dir: String) {
     * and Catalyst still pushes predicates on untouched columns to the scan;
     * timestamp predicates compare post-cast, same as the pre-drift plans. */
   def table(name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = Lake.open(spark, s"$dir/$name.parquet")
     val ntz = df.schema.fields.collect {
       case f if f.dataType == org.apache.spark.sql.types.TimestampNTZType => f.name
     }
@@ -64,4 +69,47 @@ final case class Lake(spark: SparkSession, dir: String) {
   }
   def documents: DataFrame = table("documents")
   def embeddings: DataFrame = table("embeddings")
+}
+
+object Lake {
+  /** Opens a parquet table without a Spark job. Plain `spark.read.parquet`
+    * infers the schema inside a one-task job that reads one footer
+    * (`SchemaMergeUtils.mergeSchemasInParallel`), so every open costs a
+    * job before the query starts: on a gold point lookup, half its time.
+    *
+    * The one-footer contract, the same as Spark's non-merging inference:
+    *   - data files are listed through the Hadoop `FileSystem`; names
+    *     starting with `_` (unless they hold `=`) or `.` are skipped, and
+    *     `k=v` partition directories are walked into;
+    *   - the schema is that of the first data file by path, read on the
+    *     driver with Spark's own footer-to-schema code ([[FooterSchema]]);
+    *   - it is handed to `spark.read.schema(s).parquet(path)`, so partition
+    *     columns are still discovered from the paths, and filters, column
+    *     pruning and `PushedFilters` are what inference would give.
+    *
+    * Whenever the shortcut cannot apply — no data file, a missing path, an
+    * unreadable footer, or `spark.sql.parquet.mergeSchema` on — the call
+    * is plain `spark.read.parquet(path)`, so users see the same schema or
+    * the same error as before. Nothing is memoized: each open sees the
+    * files on disk at that moment. */
+  def open(spark: SparkSession, path: String): DataFrame = {
+    val schema =
+      if (spark.sessionState.conf.isParquetSchemaMergingEnabled) None
+      else Try {
+        val root = new Path(path)
+        val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+        dataFiles(fs, fs.getFileStatus(root)).minByOption(_.getPath.toString)
+          .map(FooterSchema.read(spark, _))
+      }.toOption.flatten
+    schema.fold(spark.read.parquet(path))(s => spark.read.schema(s).parquet(path))
+  }
+
+  private def dataFiles(fs: FileSystem, st: FileStatus): Seq[FileStatus] =
+    if (st.isFile) Seq(st)
+    else fs.listStatus(st.getPath).toSeq
+      .filterNot { c =>
+        val n = c.getPath.getName
+        (n.startsWith("_") && !n.contains("=")) || n.startsWith(".")
+      }
+      .flatMap(dataFiles(fs, _))
 }

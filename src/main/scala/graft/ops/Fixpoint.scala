@@ -20,10 +20,7 @@ import org.apache.spark.sql.{Column, DataFrame}
   *     or `take` over a lazy checkpoint would cut lineage with
   *     partitions never computed, which is why callers never get to run
   *     their own convergence action (OPTIMIZATION_r13 §4);
-  *   - the count is the one eager `localCheckpoint()` itself runs, a row
-  *     count over the plan's RDD: one job, no exchange. `Dataset.count()`
-  *     plans a global aggregate instead, which under AQE is two jobs and
-  *     a shuffle of one row per partition;
+  *   - the count is [[rows]]: one job, no exchange;
   *   - a loop that has not converged after `maxIter` rounds throws an
   *     [[IllegalStateException]] naming the operator and the cap. A
   *     silently truncated fixpoint returns a wrong answer that looks like
@@ -53,8 +50,7 @@ object Fixpoint {
     *         included */
   def converge(op: String, maxIter: Int, init: DataFrame, changed: Option[Column] = None)(
       step: DataFrame => DataFrame): (DataFrame, Int) = {
-    def countOf(frame: DataFrame): Long =
-      changed.fold(frame)(frame.filter).queryExecution.toRdd.count()
+    def countOf(frame: DataFrame): Long = rows(changed.fold(frame)(frame.filter))
     @tailrec def loop(cur: DataFrame, curCount: Long, rounds: Int): (DataFrame, Int) = {
       if (rounds >= maxIter)
         throw new IllegalStateException(s"$op did not converge in $maxIter rounds")
@@ -66,4 +62,13 @@ object Fixpoint {
     val first = init.localCheckpoint(false)
     loop(first, if (changed.isDefined) -1L else countOf(first), 0)
   }
+
+  /** Row count of `frame` as one job with no exchange: the count over the
+    * plan's RDD that eager `localCheckpoint()` runs itself. It scans every
+    * partition, so it materializes a lazy checkpoint mark as
+    * `Dataset.count()` would, without the global aggregate that costs two
+    * jobs and a one-row-per-partition shuffle under AQE. The count for a
+    * driver loop that steers on the size of a checkpointed frame. Not for
+    * filling a `persist()`ed frame: see the SCC outer loop's `eNext`. */
+  def rows(frame: DataFrame): Long = frame.queryExecution.toRdd.count()
 }

@@ -5,6 +5,7 @@ import scala.collection.mutable
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, lit}
 
+import graft.core.Lake
 import graft.views.{AmtView, ViewContext}
 
 /** Incremental gold-view maintenance — the delta-batch merge path that
@@ -332,7 +333,7 @@ object IncrementalGold {
       bucketCol: String,
       affectedBucketIds: Seq[Int]): Unit = {
     merged.write.mode("overwrite").parquet(stagingPath)
-    val staged = spark.read.parquet(stagingPath)
+    val staged = Lake.open(spark, stagingPath)
     staged.repartition(col(bucketCol))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")

@@ -588,14 +588,14 @@ object WebGraph {
     val seedHosts = hosts.join(
       seeds.select(col("host").cast("string").as("host")).distinct(),
       Seq("host"), "left_semi")
-    // lazy checkpoints (r13): the frontier count is the one materializing
-    // job per round; the dist union is only CONSUMED by the next round's
-    // anti-join (or the caller), so its mark cuts lineage without its own
-    // job — BFS rounds go from 3 jobs to 1
+    // lazy checkpoints (r13): the frontier count ([[Fixpoint.rows]]) is
+    // the one materializing job per round; the dist union is only CONSUMED
+    // by the next round's anti-join (or the caller), so its mark cuts
+    // lineage without its own job — BFS rounds go from 3 jobs to 1
     var dist = seedHosts.select(col("host"), lit(0L).as("depth"))
       .localCheckpoint(false)
     var frontier = dist
-    var frontierSize = frontier.count()
+    var frontierSize = Fixpoint.rows(frontier)
     var k = 1L
     while (k <= maxDepth && frontierSize > 0) {
       val next = e
@@ -604,7 +604,7 @@ object WebGraph {
         .join(dist, Seq("host"), "left_anti")
         .select(col("host"), lit(k).as("depth"))
         .localCheckpoint(false)
-      frontierSize = next.count()
+      frontierSize = Fixpoint.rows(next)
       dist = dist.union(next).localCheckpoint(false)
       frontier = next
       k += 1
@@ -1275,14 +1275,14 @@ object WebGraph {
     val hosts = eAll.select(col("src").as("host"))
       .union(eAll.select(col("dst").as("host"))).distinct()
     // the outer loop keeps [[Fixpoint]]'s discipline by hand: lazy marks,
-    // materialized by the full-scan counts it needs anyway
+    // materialized by the [[Fixpoint.rows]] counts it needs anyway
     var remaining = hosts.localCheckpoint(false)
     var eRem = eAll.filter(col("src") =!= col("dst"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     var result = remaining.sparkSession.emptyDataFrame
       .select(lit("").as("host"), lit("").as("scc")).limit(0)
     var outer = 0
-    var left = remaining.count()
+    var left = Fixpoint.rows(remaining)
     while (left > 0 && outer < maxOuter) {
       outer += 1
       // 1. forward max-color fixpoint: color(v) = max id reaching v.
@@ -1337,12 +1337,16 @@ object WebGraph {
       // materialize remaining FIRST (its count is the loop variable
       // anyway), so eNext's two semi-join legs read its persisted blocks
       // instead of computing the anti-join twice
-      left = remaining.count()
+      left = Fixpoint.rows(remaining)
       val eNext = eRem
         .join(remaining.select(col("host").as("src")), Seq("src"), "left_semi")
         .join(remaining.select(col("host").as("dst")), Seq("dst"), "left_semi")
         .select("src", "dst")
         .persist(StorageLevel.MEMORY_AND_DISK)
+      // fills eNext's cache. Dataset.count(), not Fixpoint.rows: measured
+      // at sf0.1 (q252), an RDD count over this persisted frame saved no
+      // job and left the next round's plan varying run to run (one extra
+      // exchange in 2 of 6 runs); this count repeated exactly in 8 of 8
       eNext.count()
       eRem.unpersist()
       eRem = eNext

@@ -2910,7 +2910,7 @@ object PipelineQueries {
       val tmp = java.nio.file.Files.createTempDirectory("graft-q98-index").toString
       Similarity.ivfAssign(corpus, centroids)
         .write.mode("overwrite").partitionBy("cluster_id").parquet(s"$tmp/index")
-      val assigned = s.read.parquet(s"$tmp/index")
+      val assigned = Lake.open(s, s"$tmp/index")
       graft.core.SilverWriter.deleteOnExit(tmp)
       Similarity.ivfTopKFromAssigned(assigned, centroids, queries, k = 5, nProbe = 2)
         .select("query_id", "neighbor_id", "cos", "rank")

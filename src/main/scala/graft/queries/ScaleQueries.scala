@@ -283,7 +283,7 @@ object ScaleQueries {
       graft.core.SilverWriter.deleteOnExit(tmp)
       Bloom.build(keys, "o_orderkey", 1 << 17, 5)
         .write.mode("overwrite").parquet(s"$tmp/bloom")
-      val served = Bloom.collect(s.read.parquet(s"$tmp/bloom"), 1 << 17, 5)
+      val served = Bloom.collect(Lake.open(s, s"$tmp/bloom"), 1 << 17, 5)
       lk.lineitem
         .filter(Bloom.mightContain(served, col("l_orderkey")))
         .join(keys.withColumnRenamed("o_orderkey", "l_orderkey"),

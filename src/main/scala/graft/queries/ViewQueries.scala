@@ -164,7 +164,7 @@ object ViewQueries {
           IncrementalGold.readEndpointPruned(s, s"$root/ep-$name", nBuckets, affected)
         else shared.getOrElse(name, emptyEndpoint(s, name)),
       affected = affected)
-    s.read.parquet(s"$root/gold").drop(IncrementalGold.BucketCol)
+    Lake.open(s, s"$root/gold").drop(IncrementalGold.BucketCol)
   }
 
   // ---------------------------------------------------------------- q27
@@ -555,7 +555,7 @@ object ViewQueries {
         java.nio.file.Files.createTempDirectory("graft-q53-gold").toString
       new AmtPipeline(s, derivedOrgSilver(s, dir), "1995").writeAll(goldRoot)
       SilverWriter.deleteOnExit(goldRoot)
-      s.read.parquet(s"$goldRoot/1995/schoolDim.parquet").orderBy("SchoolKey")
+      Lake.open(s, s"$goldRoot/1995/schoolDim.parquet").orderBy("SchoolKey")
     },
     Some(schoolDimOracle)
   )
@@ -1057,7 +1057,7 @@ object ViewQueries {
         },
         affected = affected)
 
-      s.read.parquet(goldPath)
+      Lake.open(s, goldPath)
         .drop(IncrementalGold.BucketCol)
         .orderBy("SchoolKey")
     },
@@ -1170,7 +1170,7 @@ object ViewQueries {
         },
         affected = affected)
 
-      s.read.parquet(s"$tmp/gold")
+      Lake.open(s, s"$tmp/gold")
         .drop(IncrementalGold.BucketCol)
         .orderBy("SchoolKey")
     },

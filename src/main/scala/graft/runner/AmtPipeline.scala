@@ -201,7 +201,7 @@ final class AmtPipeline(
     val pool = Executors.newFixedThreadPool(parallelism)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
 
-    def writeOne(v: AmtView): Unit = {
+    def writeOne(v: AmtView): Unit = labelled(v.name) {
       // sort within partitions by the leading key column so parquet
       // row-group min/max stats prune consumer point-lookups (the
       // RLS views filter gold by user/student keys constantly)
@@ -256,7 +256,7 @@ final class AmtPipeline(
     val mats = scala.collection.mutable.Map.empty[String, Future[Unit]]
     def matOf(s: String): Future[Unit] = mats.getOrElseUpdate(s, {
       val waits = closure(s).intersect(spine).toSeq.map(matOf)
-      Future.sequence(waits).flatMap(_ => Future { view(s).count(); () })
+      Future.sequence(waits).flatMap(_ => Future { labelled(s)(view(s).count()); () })
     })
     val writes = names.map { n =>
       val waits = (closure(n) ++ Set(n)).intersect(spine).toSeq.map(matOf)
@@ -265,6 +265,22 @@ final class AmtPipeline(
     }
     try Await.result(Future.sequence(writes), Duration.Inf)
     finally pool.shutdown()
+  }
+
+  /** Runs `body` with this thread's Spark job group set to
+    * `<inherited group>/<view>`, or `amt/<view>` when the thread has none,
+    * so the Spark UI and event logs attribute each `writeViews` job to its
+    * view. A caller that sums counters by group prefix still sees every
+    * job. The thread's previous group, description and interrupt flag are
+    * restored afterwards. */
+  private def labelled[A](view: String)(body: => A): A = {
+    val sc = spark.sparkContext
+    val keys = Seq("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+    val prev = keys.map(sc.getLocalProperty)
+    val group = Option(prev.head).fold(s"amt/$view")(g => s"$g/$view")
+    sc.setJobGroup(group, group, Option(prev(2)).exists(_.toBoolean))
+    try body
+    finally keys.zip(prev).foreach { case (k, v) => sc.setLocalProperty(k, v) }
   }
 
   /** Unpersist every frame this pipeline cached (hot endpoints + shared

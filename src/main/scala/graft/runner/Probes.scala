@@ -177,10 +177,10 @@ object Probes {
       val Seq(ssaPath, attPath, goldPath) = Seq("ssa", "att", "gold").map(l => s"$tmp/${l}_$x")
       ssaRows(n).write.mode("overwrite").parquet(ssaPath)
       attRows(n, 0L).write.mode("overwrite").parquet(attPath)
-      val ssa = spark.read.parquet(ssaPath)
-      val att = spark.read.parquet(attPath)
+      val ssa = Lake.open(spark, ssaPath)
+      val att = Lake.open(spark, attPath)
       buildOver(ssa, att).write.mode("overwrite").parquet(goldPath)
-      val oldGold = spark.read.parquet(goldPath)
+      val oldGold = Lake.open(spark, goldPath)
       // one shared B keeps every layout's bucket column aligned; the bytes
       // rule sizes it off the LARGEST layout (gold dominates)
       val layoutBytes = Seq(ssaPath, attPath, goldPath).map(dirBytes)

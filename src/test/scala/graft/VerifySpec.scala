@@ -168,7 +168,67 @@ class VerifySpec extends SparkTestBase {
   * testdata with a new encoding (long nanos, TIMESTAMP_NTZ, tz'd micros…),
   * this suite fails at the Lake layer with the drifted column named. */
 class LakeSpec extends SparkTestBase {
+  import java.nio.file.{Files, Path}
+  import java.util.concurrent.ConcurrentLinkedQueue
+  import scala.jdk.CollectionConverters._
+  import org.apache.spark.graft.ListenerShim
+  import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+  import graft.runner.AmtPipeline
+
   private def lake = Lake(spark, sfDir)
+
+  /** The job group of every Spark job `body` starts, the listener bus
+    * drained before and after. */
+  private def jobGroupsOf[A](body: => A): (A, Seq[String]) = {
+    val groups = new ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = groups.add(
+        Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    ListenerShim.waitUntilListenerBusEmpty(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val a = body
+      ListenerShim.waitUntilListenerBusEmpty(spark.sparkContext)
+      (a, groups.asScala.toSeq)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** A silver tree with grading periods for `years` and nothing else:
+    * contactPersonDim builds from it as an empty frame. */
+  private def silver(years: String*): Path = {
+    val root = Files.createTempDirectory("lake-silver")
+    years.foreach { y =>
+      Seq(
+        "gradingPeriods" -> s"""[
+          {"schoolReference": {"schoolId": 1}, "schoolYearTypeReference": {"schoolYear": $y},
+           "gradingPeriodDescriptor": "uri://ed-fi.org/GradingPeriodDescriptor#First",
+           "beginDate": "2021-08-23", "endDate": "2021-10-01",
+           "totalInstructionalDays": 29, "periodSequence": 1}]""",
+        "gradingPeriodDescriptors" -> """[
+          {"gradingPeriodDescriptorId": 1, "codeValue": "First", "description": "First",
+           "namespace": "uri://ed-fi.org/GradingPeriodDescriptor", "shortDescription": "First"}]""")
+        .foreach { case (ep, json) =>
+          val d = root.resolve(y).resolve(ep)
+          Files.createDirectories(d)
+          Files.writeString(d.resolve(s"${ep}_1.json"), json)
+        }
+    }
+    root
+  }
+
+  private val goldViews = Seq("gradingPeriodDim", "mostRecentGradingPeriod", "contactPersonDim")
+
+  /** `Lake.open` and plain `spark.read.parquet` give the same schema and
+    * the same rows. */
+  private def assertSameAsInference(path: String): DataFrame = {
+    val opened = Lake.open(spark, path)
+    val inferred = spark.read.parquet(path)
+    assert(opened.schema === inferred.schema, s"schema differs for $path")
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    assert(rows(opened) === rows(inferred), s"rows differ for $path")
+    opened
+  }
 
   private def assertSchema(df: DataFrame, expected: Seq[(String, DataType)], table: String): Unit = {
     val actual = df.schema.map(f => f.name -> f.dataType)
@@ -230,5 +290,79 @@ class LakeSpec extends SparkTestBase {
       "l_discount" -> DoubleType, "l_tax" -> DoubleType,
       "l_returnflag" -> StringType, "l_linestatus" -> StringType,
       "l_shipdate" -> TimestampType), "lineitem")
+  }
+
+  test("Lake.open: gold views from writeViews, empty view included, read as inference reads them") {
+    val gold = Files.createTempDirectory("lake-gold").toString
+    new AmtPipeline(spark, silver("2022").toString, "2022").writeViews(goldViews, gold)
+    goldViews.foreach(v => assertSameAsInference(s"$gold/2022/$v.parquet"))
+    assert(Lake.open(spark, s"$gold/2022/gradingPeriodDim.parquet").count() == 1)
+    // the view written from an empty frame keeps its full schema
+    val empty = Lake.open(spark, s"$gold/2022/contactPersonDim.parquet")
+    assert(empty.count() == 0)
+    assert(empty.columns.toSeq === graft.views.base.ContactPersonDim.outputColumns)
+  }
+
+  test("Lake.open: TIMESTAMP_NTZ and nanos testdata tables read as inference reads them") {
+    Seq("events", "orders", "lineitem", "embeddings")
+      .foreach(t => assertSameAsInference(s"$sfDir/$t.parquet"))
+  }
+
+  test("Lake.open: a year-partitioned table recovers schoolYear and still prunes partitions") {
+    val gold = Files.createTempDirectory("lake-gold-py").toString
+    val tree = silver("2022", "2023").toString
+    Seq("2022", "2023").foreach(y => new AmtPipeline(spark, tree, y)
+      .writeViews(Seq("gradingPeriodDim"), gold, partitionedByYear = true))
+    val table = assertSameAsInference(s"$gold/gradingPeriodDim.parquet")
+    assert(table.columns.last == "schoolYear")
+    val filtered = table.filter(col("schoolYear") === 2022)
+    val plan = filtered.queryExecution.executedPlan.toString
+    assert(plan.contains("PartitionFilters:") && plan.contains("schoolYear"),
+      s"no partition pruning on schoolYear in:\n$plan")
+    assert(filtered.count() == 1)
+  }
+
+  test("Lake.open: opening a table starts no Spark job; the first action does") {
+    val gold = Files.createTempDirectory("lake-gold-jobs").toString
+    new AmtPipeline(spark, silver("2022").toString, "2022").writeViews(goldViews.take(1), gold)
+    val sc = spark.sparkContext
+    sc.setJobGroup("lakespec-open", "lakespec-open", false)
+    try {
+      val (df, opened) = jobGroupsOf {
+        Lake(spark, s"$gold/2022").table("gradingPeriodDim")
+        Lake.open(spark, s"$sfDir/events.parquet")
+      }
+      assert(opened.count(_ == "lakespec-open") == 0, s"open started jobs: $opened")
+      val (_, acted) = jobGroupsOf(df.count())
+      assert(acted.count(_ == "lakespec-open") > 0, "the listener saw no job at all")
+    } finally sc.clearJobGroup()
+  }
+
+  test("Lake.open: missing and empty paths fail as spark.read.parquet does") {
+    val dir = Files.createTempDirectory("lake-missing")
+    Seq(dir.resolve("absent.parquet"), Files.createDirectory(dir.resolve("empty.parquet")))
+      .map(_.toString).foreach { p =>
+        val plain = intercept[Throwable](spark.read.parquet(p))
+        val opened = intercept[Throwable](Lake.open(spark, p))
+        assert(opened.getClass == plain.getClass, s"$p: ${opened.getMessage}")
+      }
+  }
+
+  test("writeViews labels every job with its view under the caller's group, then restores it") {
+    val gold = Files.createTempDirectory("lake-gold-groups").toString
+    val p = new AmtPipeline(spark, silver("2022").toString, "2022")
+    val sc = spark.sparkContext
+    sc.setJobGroup("lakespec-write", "lakespec-write", false)
+    try {
+      val (_, groups) = jobGroupsOf(p.writeViews(goldViews, gold))
+      val ours = groups.filter(_.startsWith("lakespec-write"))
+      assert(ours.nonEmpty)
+      ours.foreach(g => assert(goldViews.exists(v => g == s"lakespec-write/$v"), g))
+      assert(sc.getLocalProperty("spark.jobGroup.id") == "lakespec-write")
+    } finally sc.clearJobGroup()
+    val (_, bare) = jobGroupsOf(
+      new AmtPipeline(spark, silver("2022").toString, "2022").writeViews(goldViews.take(1), gold))
+    assert(bare.nonEmpty && bare.forall(_ == "amt/gradingPeriodDim"), bare)
+    assert(sc.getLocalProperty("spark.jobGroup.id") == null)
   }
 }
