@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.graft.ListenerShim
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
@@ -130,18 +131,28 @@ object Measure {
 
   /** Counter totals for one measured region. The executor sums aggregate
     * every task's executorRunTime / executorCpuTime, so a sub-noise
-    * expression rewrite can be checked against CPU seconds. */
+    * expression rewrite can be checked against CPU seconds.
+    * `codegenCompiles` is the number of generated classes Janino compiled
+    * in the region: misses of the JVM-wide codegen cache, 0 when every
+    * pipeline of the region was compiled before. */
   case class Counts(
       jobs: Long, stages: Long, tasks: Long, shuffleBytes: Long,
-      shuffleRows: Long, executorRunMs: Long, executorCpuMs: Long) {
+      shuffleRows: Long, executorRunMs: Long, executorCpuMs: Long,
+      codegenCompiles: Long) {
     def json(query: String): String =
       s"""{"query":"$query","jobs":$jobs,"stages":$stages,"tasks":$tasks,""" +
         s""""shuffle_write_bytes":$shuffleBytes,"shuffle_write_rows":$shuffleRows,""" +
-        s""""executor_run_ms":$executorRunMs,"executor_cpu_ms":$executorCpuMs}"""
+        s""""executor_run_ms":$executorRunMs,"executor_cpu_ms":$executorCpuMs,""" +
+        s""""codegen_compiles":$codegenCompiles}"""
   }
 
+  /** Janino compiles so far in this JVM: Spark records one compilation
+    * time per codegen cache miss. */
+  def codegenCompiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   /** Listener counters: Spark jobs, stages, tasks, shuffle bytes and rows
-    * written, executor run and CPU time. */
+    * written, executor run and CPU time; plus the codegen compiles of the
+    * region. */
   final class Counters private () extends SparkListener {
     private val jobs, stages, tasks, shufBytes, shufRows, runMs, cpuNs = new AtomicLong
 
@@ -166,10 +177,11 @@ object Measure {
     def measure(spark: SparkSession)(f: => Unit): Counts = {
       ListenerShim.waitUntilListenerBusEmpty(spark.sparkContext)
       Seq(jobs, stages, tasks, shufBytes, shufRows, runMs, cpuNs).foreach(_.set(0))
+      val compiles0 = codegenCompiles()
       f
       ListenerShim.waitUntilListenerBusEmpty(spark.sparkContext)
       Counts(jobs.get, stages.get, tasks.get, shufBytes.get, shufRows.get,
-        runMs.get, cpuNs.get / 1000000)
+        runMs.get, cpuNs.get / 1000000, codegenCompiles() - compiles0)
     }
   }
 

@@ -15,6 +15,8 @@ class MeasureSpec extends SparkTestBase {
       assert(a.jobs > 0 && a.stages > 0 && a.shuffleBytes > 0 && a.shuffleRows > 0, a)
       assert((a.jobs, a.stages, a.shuffleBytes, a.shuffleRows) ===
         ((b.jobs, b.stages, b.shuffleBytes, b.shuffleRows)))
+      // every pipeline of the second run was compiled by the first
+      assert(b.codegenCompiles === 0, b)
     } finally spark.sparkContext.removeSparkListener(counters)
   }
 }

@@ -77,6 +77,41 @@ class VerifySpec extends SparkTestBase {
     assert(out === Map("q_a" -> 1.5, "q_b" -> 0.7))
   }
 
+  test("minsToRecord raises a floor only when the dedicated re-check confirms it") {
+    val prev = Map("q_a" -> 1.5, "q_b" -> 1.5, "q_c" -> 0.1, "q_d" -> 1.0,
+      "q_e" -> 1.5, "q_fail" -> 0.4)
+    val good = Seq(
+      "q_a" -> 3.1,   // in-suite outlier, re-check confirms: floor rises
+      "q_b" -> 3.1,   // in-suite outlier, clean JVM back near the floor
+      "q_c" -> 0.35,  // 3x but only +0.2 s: sub-floor jitter, no rise
+      "q_d" -> 2.6,   // confirmed, and the in-suite min is the lower one
+      "q_e" -> 3.1,   // never re-checked: the ratchet holds
+      "q_new" -> 2.0) // no floor yet: recorded as is
+    val dedicated = Map(
+      "q_a" -> Seq(3.2, 2.9, 3.0), "q_b" -> Seq(1.9, 2.0, 2.1),
+      "q_c" -> Seq(0.3, 0.32, 0.31), "q_d" -> Seq(3.0, 3.1, 3.2),
+      "q_new" -> Seq(9.0), "q_fail" -> Seq(5.0))
+    val out = BenchRecheck.minsToRecord(good, failed = Seq("q_fail"), prev, dedicated).toMap
+    assert(out === Map("q_a" -> 2.9, "q_b" -> 1.5, "q_c" -> 0.1, "q_d" -> 2.6,
+      "q_e" -> 1.5, "q_new" -> 2.0, "q_fail" -> 0.4))
+  }
+
+  test("writeSummary writes the printed compact line byte for byte, replacing the file") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-bench-summary")
+    val path = dir.resolve("BENCH_SUMMARY.json")
+    val line = BenchRecheck.compactLine(
+      total = 12.5, n = 2, pipelineSec = 3.25, Seq("q_a" -> 2.0, "q_b" -> 10.5),
+      Map("q_a" -> 1.0), Seq("q_c" -> "boom"), "testdata/sf0.1")
+    java.nio.file.Files.writeString(path, "stale" * 1000) // longer than the line
+    BenchRecheck.writeSummary(path.toString, line)
+    val printed = new java.io.ByteArrayOutputStream
+    Console.withOut(printed)(println(line))
+    assert(java.nio.file.Files.readAllBytes(path).toSeq === printed.toByteArray.toSeq)
+    // an unwritable path is reported, never fatal to the bench
+    BenchRecheck.writeSummary(dir.resolve("no/such/dir/BENCH_SUMMARY.json").toString, line)
+    graft.core.SilverWriter.deleteOnExit(dir.toString)
+  }
+
   test("rankOutliers: worst inflation first, not alphabetical; gates respected") {
     val prev = Map("q_a" -> 1.0, "q_b" -> 1.0, "q_c" -> 1.0,
       "q_d" -> 0.10, "q_e" -> 1.0)
