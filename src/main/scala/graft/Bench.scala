@@ -50,7 +50,7 @@ object Bench {
     // (timed, reported under "setup"), then time the queries in production
     // shape: read the index, process the batch.
     val setupDir = java.nio.file.Files.createTempDirectory("graft-bench-setup").toString
-    val (overrides, setupTimes, restore) = BenchSetup.materialize(spark, sfDir, setupDir)
+    val (overrides, setupTimes) = BenchSetup.materialize(spark, sfDir, setupDir)
 
     // Three timed passes per query, keep the per-query minimum: the plan's
     // steady-state cost, insulated from scheduler/GC/host noise (this box
@@ -65,7 +65,6 @@ object Bench {
     // JSON under "errors" with a -1.0 sentinel in "queries".
     val benchErrors = scala.collection.mutable.LinkedHashMap[String, String]()
     def timeOne(name: String, fn: (SparkSession, String) => DataFrame): Option[Double] = {
-      restore(name)
       Measure.dropCaches(spark)
       val t0 = System.nanoTime()
       try {
@@ -419,16 +418,14 @@ object BenchSetup {
   import graft.ops.{Dedup, Similarity}
 
   /** Materialize q50's near-dup pair list, q54's corpus shingles + band
-    * index, q98's cluster-partitioned IVF assignments and the standing
-    * lakes of q340/q341/q344/q345 under `dir`; return (timed-query
-    * overrides that READ the artifacts, per-query setup seconds — reported
-    * in the bench JSON under `"setup"`, like `pipeline_total` — and
-    * `restore`). `restore(name)` puts back the artifacts a pass of `name`
-    * mutates; call it before every timed pass, outside the timed region. */
+    * index and q98's cluster-partitioned IVF assignments under `dir`;
+    * return (timed-query overrides that READ the artifacts, per-query
+    * setup seconds — reported in the bench JSON under `"setup"`, like
+    * `pipeline_total`). No override writes its artifacts, so every timed
+    * pass reads the same state. */
   def materialize(
       spark: SparkSession, sfDir: String, dir: String
-  ): (Map[String, (SparkSession, String) => DataFrame], Map[String, Double],
-      String => Unit) = {
+  ): (Map[String, (SparkSession, String) => DataFrame], Map[String, Double]) = {
     def timed(f: => Unit): Double = Measure.minOf(spark, 1)(f)
     val docs = Lake(spark, sfDir).documents
     // q50: the pair list is the upstream dedup pass's output, stored in the
@@ -459,50 +456,7 @@ object BenchSetup {
         .write.mode("overwrite").partitionBy("cluster_id")
         .parquet(s"$dir/q98_ivf_index")
     }
-    // q340/q341/q344/q345 (round-13 pruned-loop migration, VERDICT r12
-    // item 3): the migrated gates' self-contained shape builds the
-    // STANDING lake state — scope-partitioned endpoint snapshots, keymap
-    // sidecars, partitioned gold — from scratch inside the query, which
-    // production writes once and amortizes across every batch. Build it
-    // ONCE here (timed, reported under "setup"); the timed query is then
-    // exactly the per-batch cost: keymap-served scope recovery + bucket-
-    // pruned endpoint/keymap/gold refresh + gold read-back. A pass
-    // advances the lake (the keymap first of all), so a second pass
-    // against the same state would time a cheaper, already-converged
-    // refresh: the standing state is written once to `<name>.pristine`
-    // and `restore` copies it back before every pass. The Verify/oracle
-    // path keeps the self-contained shape.
-    val prunedGates = Seq[(String, (SparkSession, String) => graft.queries.ViewQueries.PrunedGate)](
-      "q340_incremental_school_dim" -> (graft.queries.ViewQueries.q340Gate _),
-      "q341_incremental_ews_fact" -> (graft.queries.ViewQueries.q341Gate _),
-      "q344_incremental_chrab_fact" -> (graft.queries.ViewQueries.q344Gate _),
-      "q345_incremental_section_grade_fact" -> (graft.queries.ViewQueries.q345Gate _))
-    val gateSetups = prunedGates.map { case (name, gateOf) =>
-      name -> timed {
-        val g = gateOf(spark, sfDir)
-        graft.queries.ViewQueries.writeStandingState(
-          spark, g.scope, g.scoped, g.shared, s"$dir/$name.pristine")
-      }
-    }
-    val gateOverrides = prunedGates.map { case (name, gateOf) =>
-      name -> ((s: SparkSession, d: String) => {
-        val g = gateOf(s, d)
-        graft.queries.ViewQueries.refreshPruned(
-          s, g.scope, g.scoped, g.shared, s"$dir/$name")
-          .orderBy(g.orderCols.map(col): _*)
-      })
-    }.toMap
-    def restore(name: String): Unit = if (gateOverrides.contains(name)) {
-      import org.apache.hadoop.fs.{FileUtil, Path}
-      val conf = spark.sessionState.newHadoopConf()
-      val work = new Path(s"$dir/$name")
-      val fs = work.getFileSystem(conf)
-      fs.delete(work, true)
-      FileUtil.copy(fs, new Path(s"$dir/$name.pristine"), fs, work, false, conf)
-    }
-    gateOverrides.keys.foreach(restore)
-
-    val overrides = gateOverrides ++ Map[String, (SparkSession, String) => DataFrame](
+    val overrides = Map[String, (SparkSession, String) => DataFrame](
       "q50_dedup_clusters" -> ((s, d) => {
         val pairs = Lake.open(s, s"$dir/q50_pairs")
         Dedup.dupClusters(Lake(s, d).documents.select("doc_id"), pairs)
@@ -530,6 +484,6 @@ object BenchSetup {
     )
     (overrides,
       Map("q50_dedup_clusters" -> q50Setup, "q54_dedup_incremental" -> q54Setup,
-        "q98_ann_ivf_served" -> q98Setup) ++ gateSetups, restore)
+        "q98_ann_ivf_served" -> q98Setup))
   }
 }

@@ -3,9 +3,8 @@ package graft.ops
 import scala.collection.mutable
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, col, lit}
+import org.apache.spark.sql.functions.{broadcast, col}
 
-import graft.core.Lake
 import graft.views.{AmtView, ViewContext}
 
 /** Incremental gold-view maintenance — the delta-batch merge path that
@@ -46,51 +45,29 @@ import graft.views.{AmtView, ViewContext}
   * the scope values they vacate are recovered from the PRE-delta
   * snapshot (the only place those rows still exist).
   *
-  * Scale shape (PlanSpec "incremental gold" pin): the gold corpus and
+  * Scale shape (PlanSpec "incremental gold refresh" pin, one scoped
+  * endpoint for schoolDim and two for the EWS fact): the gold corpus and
   * every scoped-endpoint corpus cross ZERO exchanges — each is scanned
-  * once into a broadcast (anti/semi) hash join against the delta-sized
-  * key set; all shuffles in the refresh plan are delta-sized (the
-  * rebuilt slice's own aggregations).
+  * once, meets only broadcast anti joins until a broadcast semi join
+  * against the delta-sized key set cuts it to delta size; all shuffles in
+  * the refresh plan are delta-sized (the rebuilt slice's own
+  * aggregations).
   *
-  * Measured (`Measure probe incremental-gold`, local[32], min of 3,
-  * cold caches, fixed 1k-student delta; BENCH_NOTES.md): the
-  * shuffle-free [[refreshView]] is SCAN-BOUND, not flat — at ×10 corpus
-  * (100k → 1M students) the full rebuild grows 1.840 → 8.169 s (4.4×)
-  * while the incremental refresh grows 1.879 → 4.232 s (2.25×): every
-  * corpus parquet is still read whole into the broadcast semi/anti
-  * joins each batch, so the win is ~2× at ×10 and the cost still tracks
-  * corpus size. True flatness needs the SCAN pruned, not just the
-  * shuffle, on BOTH sides of the refresh:
-  *
-  *   - gold: [[writeGoldPartitioned]] + [[refreshViewPruned]] — the
-  *     merge reads only the affected buckets (partition-pruned scan,
-  *     PlanSpec-pinned) and rewrites only those partitions;
-  *   - endpoints: [[writeEndpointPartitioned]] + [[postCdcSlicePruned]]
-  *     so the slice rebuild reads only the affected buckets of each
-  *     scoped endpoint, and [[writeKeyMap]]/[[lookupScopes]] so
-  *     delete/re-key scope recovery reads only the delta ids' buckets
-  *     of a slim (id, scope) sidecar instead of the corpus.
-  *
-  * SIZING RULE the pruned path depends on: a delta touching k distinct
-  * scopes reads ≈ B·(1−(1−1/B)^k) of B buckets, which is ≈ k only when
-  * k ≪ B. Hold the BUCKET SIZE constant (an executor-core read unit) so
-  * B grows with the corpus — then a fixed-size delta's refresh cost is
-  * O(k · bucketSize), independent of corpus size. With B fixed instead,
-  * the pruned read is a fixed FRACTION of the corpus (still linear).
-  *
-  * MEASURED (IncrementalGoldProbe, local[32], min of 3, 100k→1M
-  * students, B = corpus/400; BENCH_NOTES.md round 12). The touched
-  * fraction falls exactly as the formula says — a ~300-scope delta
-  * touches 180/250 buckets at 1× but 286/2500 at ×10 (72% → 11%) — and
-  * dir-targeted listing (r12: [[readBuckets]] lists only affected
-  * bucket dirs, O(touched), instead of indexing all B partitions) cut
-  * the pruned arm 23.7 → 8.0 s at ×10. The LOCAL wall-clock remains an
-  * honest negative: at sandbox scale a bucket is a KB-sized file, so
-  * per-file open overhead keeps the pruned arm at ≈ the scan-bound
-  * `incr` arm at ×10 (8.0 vs 7.4 s) and LOSING at 1× (5.9 vs 2.3 s).
-  * The win this layout buys is the falling touched-fraction and the
-  * O(touched) listing — realized when buckets are production-sized
-  * (≥ tens of MB), a regime a 128 GB sandbox cannot reach.
+  * Measured, and the decision (`Measure probe incremental-gold`, EWS
+  * fact, fixed delta, min of 3, cold caches; BENCH_NOTES "Incremental
+  * gold: one refresh path"): [[refreshView]] is SCAN-BOUND, not flat —
+  * every corpus parquet is read whole into the broadcast joins each
+  * batch — but it beats the full rebuild at both measured corpus sizes,
+  * and the gap widens with the corpus (4 cores, 1k-student delta: 2.4
+  * vs 5.0 s at 100k students, 6.8 vs 38.7 s at 1M). A
+  * bucket-pruned variant (scope-partitioned gold and endpoint layouts
+  * plus an id→scope sidecar, reading and rewriting only the affected
+  * buckets) was built and measured against it on the same 4 cores and
+  * lost at every size: 7.7 vs 2.4 s at 100k, 16.7 vs 6.8 s at 1M, and it
+  * lost at 32 cores too (round 12: 5.9 vs 2.3 s at 1×, 8.0 vs 7.4 s at
+  * ×10). Its projected win needs buckets of tens of MB, far past any
+  * measured scale, so it was deleted and [[refreshView]] is the one
+  * scoped refresh.
   */
 object IncrementalGold {
 
@@ -244,381 +221,6 @@ object IncrementalGold {
   private def normalizedScopes(affected: DataFrame): DataFrame = affected
     .select(col(affected.columns.head).cast("string").as("__scope"))
     .distinct()
-
-  /** Partition column [[writeGoldPartitioned]] appends: a stable hash
-    * bucket of the scope key. A VALUE, not raw scope, so the lake holds
-    * `nBuckets` directories regardless of scope cardinality. */
-  val BucketCol = "scope_bucket"
-
-  /** `xxhash64(scope) mod n` as a non-negative bucket id. INT, not long:
-    * parquet partition-value inference reads the directory names back as
-    * int, and the pruning literals must match that type exactly or the
-    * cast around the partition column defeats the prune. */
-  def scopeBucket(scopeCol: Column, nBuckets: Int): Column =
-    org.apache.spark.sql.functions.pmod(
-      org.apache.spark.sql.functions.xxhash64(scopeCol.cast("string")),
-      lit(nBuckets.toLong)).cast("int")
-
-  /** Lay a gold view out hash-partitioned on its scope key so a delta
-    * refresh can PRUNE the merge scan (the scan-bound ceiling of
-    * [[refreshView]], measured in the object scaladoc): one directory per
-    * scope bucket, and [[refreshViewPruned]] reads/rewrites only the
-    * buckets the delta touches. */
-  def writeGoldPartitioned(
-      gold: DataFrame, scope: Scope, path: String, nBuckets: Int): Unit =
-    gold.withColumn(BucketCol, scopeBucket(scope.scopeColumn(gold), nBuckets))
-      .repartition(col(BucketCol))
-      .write.mode("overwrite").partitionBy(BucketCol).parquet(path)
-
-  /** [[refreshView]] against a [[writeGoldPartitioned]] layout, with the
-    * corpus SCAN pruned, not just the shuffle: the delta's distinct
-    * bucket ids (an O(nBuckets)-bounded collect — capped by the layout
-    * constant, never by data size) prune the old-gold read to the
-    * affected partitions, the merge anti-join runs over that pruned
-    * slice only, and the write rewrites ONLY those partitions via
-    * dynamic partition overwrite. Untouched buckets are never read and
-    * never rewritten, so refresh cost tracks the affected-bucket
-    * volume ≈ B·(1−(1−1/B)^k) · bucketSize — delta-sized when k ≪ B
-    * (the sizing rule in the object scaladoc); the endpoint side needs
-    * [[postCdcSlicePruned]] or the rebuild stays endpoint-scan-bound.
-    *
-    * The merged slice is staged to `stagingPath` first: Spark refuses to
-    * overwrite a path that feeds the same plan, and the stage isolates
-    * the read from the overwrite. The overwrite itself commits per
-    * partition, NOT atomically across buckets — a run that dies midway
-    * leaves a mix of old and new buckets; re-running the same batch
-    * converges (the whole refresh is idempotent given the same staged
-    * inputs). Affected buckets the merge leaves EMPTY (a batch that
-    * deletes or re-keys away every scope in a bucket) are explicitly
-    * dropped — dynamic overwrite alone never touches a partition absent
-    * from the output, which would leave the vacated bucket's stale
-    * files alive. Both writes are affected-slice-sized. */
-  def refreshViewPruned(
-      scope: Scope,
-      goldPath: String,
-      stagingPath: String,
-      nBuckets: Int,
-      newEndpoint: String => DataFrame,
-      affected: DataFrame): Unit = {
-    val spark = affected.sparkSession
-    // Normalize + eagerly materialize the delta-sized scope set ONCE
-    // (r12 optimization, guide §5): the bucket-id collect, the staging
-    // write, and the overwrite are separate JOBS, and a lazy `affected`
-    // re-runs its scope-recovery subtree — for a batchScopes caller
-    // that is a full corpus semi-join — once per job. The checkpoint is
-    // delta-sized; measured on q346 (JobCount): 34 → 31 jobs.
-    val aff = normalizedScopes(affected).localCheckpoint(true)
-    val buckets = bucketIds(aff, nBuckets)
-    val merged = prunedMergeOf(scope, goldPath, nBuckets, newEndpoint, aff, buckets)
-    overwriteAffected(spark, merged, goldPath, stagingPath, BucketCol,
-      buckets.toSeq)
-  }
-
-  /** Stage `merged`, rewrite only its partitions into `destPath` via
-    * dynamic partition overwrite, then DROP any affected bucket the
-    * merged output has zero rows for — without the drop, a batch that
-    * vacates a whole bucket would leave its stale files alive and
-    * resurfacing on read-back (ADVICE r11). The staged copy is what the
-    * overwrite reads (Spark refuses to overwrite its own input path);
-    * the final repartition gives one file per rewritten bucket. The
-    * present-bucket collect is O(nBuckets)-bounded and reads one column
-    * of the delta-sized staging. Per-partition commit means a midway
-    * failure leaves mixed old/new buckets; re-running the same batch is
-    * idempotent and converges. */
-  private def overwriteAffected(
-      spark: SparkSession,
-      merged: DataFrame,
-      destPath: String,
-      stagingPath: String,
-      bucketCol: String,
-      affectedBucketIds: Seq[Int]): Unit = {
-    merged.write.mode("overwrite").parquet(stagingPath)
-    val staged = Lake.open(spark, stagingPath)
-    staged.repartition(col(bucketCol))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(bucketCol)
-      .parquet(destPath)
-    val present = staged.select(col(bucketCol).cast("int").as("b"))
-      .distinct().collect().map(_.getInt(0)).toSet
-    val vacated = affectedBucketIds.filterNot(present)
-    if (vacated.nonEmpty) {
-      val root = new org.apache.hadoop.fs.Path(destPath)
-      val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-      vacated.foreach { b =>
-        fs.delete(new org.apache.hadoop.fs.Path(root, s"$bucketCol=$b"), true)
-      }
-    }
-  }
-
-  /** The delta's distinct bucket ids — the O(nBuckets)-bounded collect
-    * every pruned path shares (never data-sized: capped by the layout
-    * constant). */
-  private def affectedBuckets(affected: DataFrame, nBuckets: Int): Array[Int] =
-    bucketIds(normalizedScopes(affected), nBuckets)
-
-  /** [[affectedBuckets]] over an already-normalized `__scope` frame. */
-  private def bucketIds(aff: DataFrame, nBuckets: Int): Array[Int] =
-    aff.select(scopeBucket(col("__scope"), nBuckets).as("b"))
-      .distinct().collect().map(_.getInt(0))
-
-  /** Dir-targeted pruned read of a bucket-partitioned layout: list ONLY
-    * the affected buckets' directories (existence-checked, O(touched)
-    * driver calls) instead of indexing all B partitions and pruning
-    * after the fact (r12 optimization, guide §6). With B sized by the
-    * constant-bucket-size rule, B grows with the corpus — an O(B)
-    * directory listing per refresh job is exactly the driver-side
-    * listing bottleneck the guide warns about (§7.3), and Spark spawns
-    * a distributed listing job once the path count passes 32. The
-    * `basePath` option keeps the partition column recoverable from the
-    * selected dir names. A bucket dir may be legitimately absent (never
-    * written, or vacated and dropped) — absent dirs contribute no rows,
-    * same as the partition-filter shape. Empty selection returns the
-    * layout's empty frame with the schema read off ONE existing bucket
-    * dir, not an O(B) whole-root listing (ADVICE r12 — schema inference
-    * over the root re-paid exactly the listing this method removes, and
-    * threw on a layout with no files yet). Concurrency: the exists-check
-    * then read is not atomic — a concurrent refresh dropping a vacated
-    * bucket between them would fail the scan with FileNotFoundException.
-    * That is acceptable under the documented SINGLE-WRITER refresh
-    * assumption (one batch advances a layout at a time; the overwrite
-    * commit in [[overwriteAffected]] is per-partition, same assumption).
-    * IncrementalGoldProbe measured the dir-targeted switch at ×10 corpus
-    * (B=2500): pruned arm 23.7 → 8.0 s (BENCH_NOTES r12). */
-  private def readBuckets(
-      spark: SparkSession, path: String, bucketCol: String,
-      buckets: Array[Int]): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val dirs = buckets.sorted.map(b =>
-        new org.apache.hadoop.fs.Path(root, s"$bucketCol=$b"))
-      .filter(fs.exists)
-    if (dirs.isEmpty) {
-      // one directory-level listStatus (a single RPC), then the schema
-      // from one bucket dir — never a recursive whole-root file listing
-      val anyBucket = fs.listStatus(root).collectFirst {
-        case s if s.isDirectory && s.getPath.getName.startsWith(s"$bucketCol=") =>
-          s.getPath
-      }
-      anyBucket match {
-        case Some(d) =>
-          spark.read.option("basePath", path).parquet(d.toString)
-            .filter(lit(false))
-        case None => throw new IllegalStateException(
-          s"no $bucketCol=* partitions under $path — the layout must be " +
-            "written (writeGoldPartitioned/writeEndpointPartitioned/" +
-            "writeKeyMap) before a pruned read")
-      }
-    } else spark.read.option("basePath", path)
-      .parquet(dirs.map(_.toString).toIndexedSeq: _*)
-  }
-
-  // ------------------------------------------------------------------
-  // Endpoint-side pruning (VERDICT r11 item 1b): gold-only pruning
-  // leaves the refresh ENDPOINT-scan-bound — rebuildSlice still read
-  // each scoped endpoint's full parquet into the broadcast semi-join.
-  // The same scope-bucket layout on the endpoint snapshots closes that.
-  // ------------------------------------------------------------------
-
-  /** Lay a scoped ENDPOINT snapshot out hash-partitioned on its scope
-    * key — the same layout as [[writeGoldPartitioned]], so a delta
-    * refresh prunes the endpoint scans exactly like the gold scan. One
-    * file per bucket (the repartition shuffles once, at write time —
-    * the standing-lake cost every pruned refresh amortizes). */
-  def writeEndpointPartitioned(
-      snapshot: DataFrame, scopeOf: DataFrame => Column,
-      path: String, nBuckets: Int): Unit =
-    snapshot.withColumn(BucketCol, scopeBucket(scopeOf(snapshot), nBuckets))
-      .repartition(col(BucketCol))
-      .write.mode("overwrite").partitionBy(BucketCol).parquet(path)
-
-  /** Partition-pruned read of a [[writeEndpointPartitioned]] layout:
-    * only the affected scopes' buckets are listed and scanned
-    * (PlanSpec-pinned partition filter). A bucket is a superset of its
-    * scopes, so callers still apply the exact semi-join on top —
-    * [[rebuildSlice]] already does. */
-  def readEndpointPruned(
-      spark: SparkSession, path: String, nBuckets: Int,
-      affected: DataFrame): DataFrame =
-    readEndpointPrunedBy(spark, path, affectedBuckets(affected, nBuckets))
-
-  /** [[readEndpointPruned]] with the bucket ids already collected. */
-  private def readEndpointPrunedBy(
-      spark: SparkSession, path: String, buckets: Array[Int]): DataFrame =
-    readBuckets(spark, path, BucketCol, buckets).drop(BucketCol)
-
-  /** POST-CDC state of a scope-partitioned endpoint, restricted to the
-    * affected buckets: pruned old slice, minus touched ids (broadcast
-    * anti-join), plus the upserts. Exact for any consumer that only
-    * looks at affected scopes — [[rebuildSlice]]'s semi-join — PROVIDED
-    * `affected` ⊇ the batch's [[batchScopes]] (an upsert whose scope is
-    * outside `affected` would land in an unread bucket). */
-  def postCdcSlicePruned(
-      spark: SparkSession, path: String, nBuckets: Int,
-      batch: CdcBatch, affected: DataFrame, idCol: String = "id"): DataFrame = {
-    val touched = batch.upserts.select(col(idCol))
-      .unionByName(batch.deleteIds.select(col(idCol))).distinct()
-    readEndpointPruned(spark, path, nBuckets, affected)
-      .join(broadcast(touched), Seq(idCol), "left_anti")
-      .unionByName(batch.upserts)
-  }
-
-  /** Advance a [[writeEndpointPartitioned]] snapshot by one CDC batch,
-    * reading and rewriting only the affected buckets (the endpoint twin
-    * of [[refreshViewPruned]], vacated buckets dropped the same way).
-    * `affected` must cover the batch's [[batchScopes]] — use
-    * [[batchScopesPruned]] so the vacated-scope recovery is itself
-    * pruned. */
-  def refreshEndpointPartitioned(
-      spark: SparkSession, path: String, stagingPath: String, nBuckets: Int,
-      batch: CdcBatch, scopeOf: DataFrame => Column,
-      affected: DataFrame, idCol: String = "id"): Unit = {
-    // one evaluation of the affected set for both the pruned read and
-    // the vacated-bucket drop list (same rationale as refreshViewPruned)
-    val aff = normalizedScopes(affected).localCheckpoint(true)
-    val buckets = bucketIds(aff, nBuckets)
-    val touched = batch.upserts.select(col(idCol))
-      .unionByName(batch.deleteIds.select(col(idCol))).distinct()
-    val slice = readEndpointPrunedBy(spark, path, buckets)
-      .join(broadcast(touched), Seq(idCol), "left_anti")
-      .unionByName(batch.upserts)
-    val merged = slice.withColumn(BucketCol, scopeBucket(scopeOf(slice), nBuckets))
-    overwriteAffected(spark, merged, path, stagingPath, BucketCol,
-      buckets.toSeq)
-  }
-
-  // ------------------------------------------------------------------
-  // Keymap sidecar: delete/re-key scope recovery without a corpus scan.
-  // The /deletes feed carries only resource ids (api/api.py:133-136);
-  // deleteScopes/batchScopes recover their vacated scopes by an
-  // id-semi-join over the WHOLE pre-delta snapshot — the one residual
-  // full scan in the pruned refresh. A slim (id, scope) sidecar laid
-  // out by ID bucket makes that lookup delta-sized too.
-  // ------------------------------------------------------------------
-
-  /** Partition column of the [[writeKeyMap]] sidecar: a stable hash
-    * bucket of the resource id (ids don't carry the scope, so the scope
-    * layout can't serve id lookups). */
-  val IdBucketCol = "id_bucket"
-
-  /** Write the (id, scope) sidecar for one endpoint, hash-partitioned
-    * on the id. Two thin columns regardless of endpoint width — at
-    * 100 TB the sidecar is a rounding error next to the snapshot, and
-    * it turns delete/re-key scope recovery from a corpus scan into a
-    * read of ≈ min(|delta|, nIdBuckets) buckets. */
-  def writeKeyMap(
-      snapshot: DataFrame, scopeOf: DataFrame => Column,
-      path: String, nIdBuckets: Int, idCol: String = "id"): Unit =
-    snapshot.select(
-        col(idCol).cast("string").as(idCol),
-        scopeOf(snapshot).cast("string").as("scope"))
-      .withColumn(IdBucketCol, scopeBucket(col(idCol), nIdBuckets))
-      .repartition(col(IdBucketCol))
-      .write.mode("overwrite").partitionBy(IdBucketCol).parquet(path)
-
-  /** The scopes a set of resource ids occupy, served from the keymap:
-    * the ids' distinct id-buckets (O(nIdBuckets)-bounded collect) prune
-    * the sidecar scan, then a broadcast semi-join narrows to the exact
-    * ids. Delta-sized both sides. */
-  def lookupScopes(
-      spark: SparkSession, keyMapPath: String, nIdBuckets: Int,
-      ids: DataFrame, idCol: String = "id"): DataFrame = {
-    val wanted = ids.select(col(ids.columns.head).cast("string").as(idCol))
-      .distinct()
-    val buckets = wanted
-      .select(scopeBucket(col(idCol), nIdBuckets).as("b"))
-      .distinct().collect().map(_.getInt(0))
-    readBuckets(spark, keyMapPath, IdBucketCol, buckets)
-      .join(broadcast(wanted), Seq(idCol), "left_semi")
-      .select(col("scope"))
-  }
-
-  /** [[batchScopes]] with the vacated-scope recovery served from the
-    * keymap instead of a full-snapshot semi-join — the fully pruned
-    * affected-scope set: new scopes off the upsert rows (delta-sized),
-    * vacated scopes of upserted AND deleted ids from their id-buckets
-    * only.
-    *
-    * EAGERLY materialized (delta-sized localCheckpoint): the affected
-    * set drives refreshes that REWRITE the very keymap/endpoint files
-    * it derives from — a lazy plan re-executed after [[refreshKeyMap]]
-    * would re-list mutated paths and die on vanished files. Truncating
-    * the lineage here makes the set safe to consume in any refresh
-    * order. */
-  def batchScopesPruned(
-      spark: SparkSession, keyMapPath: String, nIdBuckets: Int,
-      batch: CdcBatch, scopeOf: DataFrame => Column,
-      idCol: String = "id"): DataFrame = {
-    val touched = batch.upserts.select(col(idCol))
-      .unionByName(batch.deleteIds.select(col(idCol)))
-    batch.upserts
-      .select(scopeOf(batch.upserts).cast("string").as("scope"))
-      .unionByName(lookupScopes(spark, keyMapPath, nIdBuckets, touched, idCol))
-      .distinct()
-      .localCheckpoint(true)
-  }
-
-  /** Advance the keymap sidecar by one CDC batch: read only the touched
-    * ids' buckets, drop the touched ids, append the upserts' (id, scope)
-    * rows, rewrite only those id-buckets (vacated buckets dropped). */
-  def refreshKeyMap(
-      spark: SparkSession, path: String, stagingPath: String,
-      nIdBuckets: Int, batch: CdcBatch, scopeOf: DataFrame => Column,
-      idCol: String = "id"): Unit = {
-    val touched = batch.upserts.select(col(idCol).cast("string").as(idCol))
-      .unionByName(batch.deleteIds.select(col(idCol).cast("string").as(idCol)))
-      .distinct()
-    val buckets = touched
-      .select(scopeBucket(col(idCol), nIdBuckets).as("b"))
-      .distinct().collect().map(_.getInt(0))
-    val oldSlice = readBuckets(spark, path, IdBucketCol, buckets)
-    val merged = oldSlice
-      .join(broadcast(touched), Seq(idCol), "left_anti")
-      .unionByName(
-        batch.upserts.select(
-            col(idCol).cast("string").as(idCol),
-            scopeOf(batch.upserts).cast("string").as("scope"))
-          .withColumn(IdBucketCol, scopeBucket(col(idCol), nIdBuckets)))
-    overwriteAffected(spark, merged, path, stagingPath, IdBucketCol,
-      buckets.toSeq)
-  }
-
-  /** The pruned merge frame [[refreshViewPruned]] materializes — exposed
-    * so PlanSpec can pin the physical property directly: the old-gold
-    * scan under this frame carries a partition filter on [[BucketCol]]
-    * and lists only the affected buckets' files. */
-  def prunedMerge(
-      scope: Scope,
-      goldPath: String,
-      nBuckets: Int,
-      newEndpoint: String => DataFrame,
-      affected: DataFrame): DataFrame = {
-    val aff = normalizedScopes(affected)
-    prunedMergeOf(scope, goldPath, nBuckets, newEndpoint, aff,
-      bucketIds(aff, nBuckets))
-  }
-
-  /** [[prunedMerge]] over a pre-normalized scope frame and its
-    * pre-collected bucket ids — the seam [[refreshViewPruned]] uses so
-    * the (possibly corpus-scan-recovered) affected set is evaluated
-    * once, not once per downstream job. */
-  private def prunedMergeOf(
-      scope: Scope,
-      goldPath: String,
-      nBuckets: Int,
-      newEndpoint: String => DataFrame,
-      aff: DataFrame,
-      buckets: Array[Int]): DataFrame = {
-    val spark = aff.sparkSession
-    val oldSlice = readBuckets(spark, goldPath, BucketCol, buckets)
-    val rebuilt = rebuildSlice(scope, newEndpoint, aff)
-    oldSlice
-      .join(broadcast(aff),
-        scope.scopeColumn(oldSlice).cast("string") === col("__scope"), "left_anti")
-      .unionByName(
-        rebuilt.withColumn(BucketCol,
-          scopeBucket(scope.scopeColumn(rebuilt), nBuckets)))
-  }
 
   /** The per-view scope contracts for the incrementally-maintainable
     * views proven by the q340/q341 gates. schoolDim is scoped by the

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{EndpointCatalog, Lake, SilverWriter}
+import graft.ops.IncrementalGold
 import graft.runner.{AmtPipeline, AmtRegistry}
 import graft.views.ViewContext
 
@@ -50,121 +51,28 @@ object ViewQueries {
     ctx
   }
 
-  /** One scoped endpoint of a pruned-loop gate: its pre-delta snapshot,
-    * the scope accessor, and the CDC batch advancing it. */
-  private[graft] final case class ScopedEp(
-      name: String, snapshot: DataFrame,
-      scopeOf: DataFrame => org.apache.spark.sql.Column,
-      batch: graft.ops.IncrementalGold.CdcBatch)
-
-  /** A pruned-loop gate's full specification — shared between the
-    * self-contained declared query and [[graft.BenchSetup]]'s
-    * setup/operator split. */
-  private[graft] final case class PrunedGate(
-      scope: graft.ops.IncrementalGold.Scope,
-      scoped: Seq[ScopedEp],
-      shared: Map[String, DataFrame],
-      orderCols: Seq[String])
-
-  /** The FULL pruned incremental loop for one view (round-13 migration,
-    * VERDICT r12 item 3 — q341/q344/q345 previously rode the scan-bound
-    * [[graft.ops.IncrementalGold.refreshView]], whose broadcast semi/anti
-    * joins still READ every corpus parquet whole per batch: their 100 TB
-    * ceiling). Shape identical to the q348 gate, generalized to
-    * multi-endpoint scopes:
-    *
-    *  1. standing lake state (what production carries between batches):
-    *     each scoped endpoint laid out scope-partitioned with an
-    *     id→scope keymap sidecar, the old gold laid out scope-partitioned;
-    *  2. affected scopes from [[IncrementalGold.batchScopesPruned]] —
-    *     vacated/re-keyed scopes recovered from the delta ids' keymap
-    *     buckets, never a corpus scan;
-    *  3. endpoints + keymaps advanced bucket-pruned
-    *     ([[IncrementalGold.refreshEndpointPartitioned]]/[[IncrementalGold.refreshKeyMap]]);
-    *  4. the view merged via [[IncrementalGold.refreshViewPruned]] with
-    *     scoped endpoints served by [[IncrementalGold.readEndpointPruned]]
-    *     (shared dimensions pass whole), reading and rewriting only
-    *     affected buckets.
-    *
-    * Returns the refreshed gold read back (bucket column dropped) — each
-    * caller's unchanged DuckDB oracle states the view over the FINAL
-    * state, so the hash gate IS the pruned ≡ full-recompute proof. */
-  private def fullyPrunedRefresh(
+  /** One incremental gold refresh, end to end, for the q340/q341/q344/q345
+    * and q349/q350 gates: old gold is the view over the pre-delta endpoints, each scoped
+    * endpoint (name → pre-delta snapshot and its CDC batch) advances by
+    * [[IncrementalGold.applyCdc]], the affected scopes come from
+    * [[IncrementalGold.batchScopes]] under the view's own [[IncrementalGold.Scope]]
+    * accessor (scopes vacated by deletes and re-keying upserts included),
+    * and [[IncrementalGold.refreshView]] merges the rebuilt slice. Each
+    * gate's oracle states the view over the FINAL state, so its hash match
+    * is the incremental ≡ full-recompute proof. */
+  private def incrementalRefresh(
       s: SparkSession,
-      scope: graft.ops.IncrementalGold.Scope,
-      scoped: Seq[ScopedEp],
-      shared: Map[String, DataFrame],
-      nBuckets: Int = 16): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-pruned").toString
-    SilverWriter.deleteOnExit(tmp)
-    writeStandingState(s, scope, scoped, shared, tmp, nBuckets)
-    refreshPruned(s, scope, scoped, shared, tmp, nBuckets)
-  }
-
-  /** The STANDING lake state the pruned loop amortizes across batches:
-    * each scoped endpoint's scope-partitioned snapshot + id→scope keymap
-    * and the old gold scope-partitioned. In production these are written
-    * once and advanced per batch; the self-contained gates rebuild them
-    * per invocation (correctness shape), while [[graft.BenchSetup]]
-    * builds them ONCE under the bench's setup dir (timed under "setup")
-    * so the timed query measures the per-batch refresh — exactly what a
-    * production invocation pays. */
-  private[graft] def writeStandingState(
-      s: SparkSession,
-      scope: graft.ops.IncrementalGold.Scope,
-      scoped: Seq[ScopedEp],
-      shared: Map[String, DataFrame],
-      root: String,
-      nBuckets: Int = 16): Unit = {
-    import graft.ops.IncrementalGold
-    val oldGold = ctxWith(s,
-      scoped.map(e => e.name -> e.snapshot).toMap ++ shared)
+      scope: IncrementalGold.Scope,
+      scoped: Map[String, (DataFrame, IncrementalGold.CdcBatch)],
+      shared: Map[String, DataFrame]): DataFrame = {
+    val oldGold = ctxWith(s, scoped.map { case (n, (snap, _)) => n -> snap } ++ shared)
       .view(scope.view.name)
-    scoped.foreach { e =>
-      IncrementalGold.writeEndpointPartitioned(
-        e.snapshot, e.scopeOf, s"$root/ep-${e.name}", nBuckets)
-      IncrementalGold.writeKeyMap(
-        e.snapshot, e.scopeOf, s"$root/km-${e.name}", nBuckets)
-    }
-    IncrementalGold.writeGoldPartitioned(oldGold, scope, s"$root/gold", nBuckets)
-  }
-
-  /** One per-batch advance of a [[writeStandingState]] lake: keymap-served
-    * affected scopes, endpoint + keymap + gold layouts refreshed bucket-
-    * pruned, refreshed gold read back. Idempotent for a fixed batch —
-    * re-applying the same batch to an already-advanced lake converges to
-    * the same state (documented in [[graft.ops.IncrementalGold]]), which
-    * is what lets the bench time it three times against one setup. */
-  private[graft] def refreshPruned(
-      s: SparkSession,
-      scope: graft.ops.IncrementalGold.Scope,
-      scoped: Seq[ScopedEp],
-      shared: Map[String, DataFrame],
-      root: String,
-      nBuckets: Int = 16): DataFrame = {
-    import graft.ops.IncrementalGold
-    val affected = scoped.map { e =>
-      IncrementalGold.batchScopesPruned(
-        s, s"$root/km-${e.name}", nBuckets, e.batch, e.scopeOf)
-    }.reduce(_ unionByName _).distinct().localCheckpoint(true)
-
-    scoped.foreach { e =>
-      IncrementalGold.refreshEndpointPartitioned(
-        s, s"$root/ep-${e.name}", s"$root/stage-ep-${e.name}", nBuckets,
-        e.batch, e.scopeOf, affected)
-      IncrementalGold.refreshKeyMap(
-        s, s"$root/km-${e.name}", s"$root/stage-km-${e.name}", nBuckets,
-        e.batch, e.scopeOf)
-    }
-    val scopedNames = scoped.map(_.name).toSet
-    IncrementalGold.refreshViewPruned(
-      scope, s"$root/gold", s"$root/stage-gold", nBuckets,
-      newEndpoint = name =>
-        if (scopedNames(name))
-          IncrementalGold.readEndpointPruned(s, s"$root/ep-$name", nBuckets, affected)
-        else shared.getOrElse(name, emptyEndpoint(s, name)),
-      affected = affected)
-    Lake.open(s, s"$root/gold").drop(IncrementalGold.BucketCol)
+    val post = scoped.map { case (n, (snap, batch)) => n -> IncrementalGold.applyCdc(snap, batch) }
+    val affected = scoped.map { case (n, (snap, batch)) =>
+      IncrementalGold.batchScopes(snap, batch, scope.scopedEndpoints(n))
+    }.reduce(_ unionByName _)
+    IncrementalGold.refreshView(scope, oldGold,
+      n => post.getOrElse(n, shared.getOrElse(n, emptyEndpoint(s, n))), affected)
   }
 
   // ---------------------------------------------------------------- q27
@@ -568,14 +476,13 @@ object ViewQueries {
     * deletes custkey%13==5 via the `/deletes` id feed. The query runs the
     * FULL incremental path — oldGold from the pre-delta snapshot,
     * [[IncrementalGold.applyCdc]] at the endpoint layer, affected scopes
-    * from upserts + [[IncrementalGold.deleteScopes]], scoped rebuild +
-    * broadcast anti-join merge — and the oracle states the view over the
-    * FINAL state directly, so the hash match IS the
+    * from [[IncrementalGold.batchScopes]], scoped rebuild + broadcast
+    * anti-join merge ([[incrementalRefresh]]) — and the oracle states the
+    * view over the FINAL state directly, so the hash match IS the
     * incremental ≡ full-recompute proof. */
-  /** q340's fixture as a [[PrunedGate]] (shared with BenchSetup). */
-  private[graft] def q340Gate(s: SparkSession, dir: String): PrunedGate = {
-    import graft.ops.IncrementalGold
-    {
+  private val q340 = Q(
+    "q340_incremental_school_dim",
+    (s, dir) => {
       val lake = Lake(s, dir)
       val cust = lake.customer.select(
         col("c_custkey"), col("c_nationkey"), col("c_name"), col("c_mktsegment"))
@@ -614,24 +521,10 @@ object ViewQueries {
         .filter(col("c_custkey") % 13 === 5 && col("c_custkey") % 7 =!= 3)
         .select(col("c_custkey").cast("string").as("id"))
 
-      PrunedGate(IncrementalGold.schoolDimScope,
-        scoped = Seq(ScopedEp("schools", snapshot,
-          df => df("schoolId"), IncrementalGold.CdcBatch(upserts, delIds))),
-        shared = Map("localEducationAgencies" -> leas),
-        orderCols = Seq("SchoolKey"))
-    }
-  }
-
-  private val q340 = Q(
-    "q340_incremental_school_dim",
-    (s, dir) => {
-      // round-13 migration (VERDICT r12 item 3): the scan-bound
-      // refreshView became the FULL pruned loop — endpoint + keymap +
-      // gold layouts, keymap-served scope recovery, bucket-pruned
-      // refresh. Oracle unchanged: the hash gate proves pruned ≡ full.
-      val g = q340Gate(s, dir)
-      fullyPrunedRefresh(s, g.scope, g.scoped, g.shared)
-        .orderBy(g.orderCols.map(col): _*)
+      incrementalRefresh(s, IncrementalGold.schoolDimScope,
+        scoped = Map("schools" -> (snapshot, IncrementalGold.CdcBatch(upserts, delIds))),
+        shared = Map("localEducationAgencies" -> leas))
+        .orderBy("SchoolKey")
     },
     Some("""
       SELECT CAST(c_custkey AS VARCHAR) AS SchoolKey,
@@ -656,6 +549,68 @@ object ViewQueries {
   )
 
   // ---------------------------------------------------------------- q341
+  /** The shared q341/q344 fixture — enrollment spine + split attendance
+    * delivery + calendar — refreshed through whichever fact contract
+    * consumes it. */
+  private def ewsChrabRefresh(
+      s: SparkSession, dir: String, scope: IncrementalGold.Scope): DataFrame = {
+    val lake = Lake(s, dir)
+    val cust = lake.customer.select(col("c_custkey"), col("c_nationkey"))
+
+    val ssa = cust.select(
+      col("c_custkey").cast("string").as("id"),
+      struct(col("c_nationkey").cast("long").as("schoolId")).as("schoolReference"),
+      struct(lit(1995L).as("schoolYear")).as("schoolYearTypeReference"),
+      struct(col("c_custkey").cast("string").as("studentUniqueId")).as("studentReference"),
+      lit("1995-01-05").as("entryDate"),
+      when(col("c_custkey") % 10 === 0, "1995-01-20")
+        .otherwise(lit(null).cast("string")).as("exitWithdrawDate"))
+
+    val jan = lake.orders
+      .filter(col("o_orderdate").between("1995-01-01", "1995-01-31"))
+    val cal = jan.select(col("o_orderdate").cast("string").as("date")).distinct()
+      .crossJoin(lake.nation.select(col("n_nationkey")))
+      .select(
+        struct(
+          col("n_nationkey").cast("long").as("schoolId"),
+          lit(1995L).as("schoolYear")).as("calendarReference"),
+        col("date"),
+        array(struct(
+          when(dayofmonth(to_date(col("date"))) % 5 =!= 0,
+            "uri://ed-fi.org/CalendarEventDescriptor#Instructional day")
+            .otherwise("uri://ed-fi.org/CalendarEventDescriptor#Holiday")
+            .as("calendarEventDescriptor"))).as("calendarEvents"))
+
+    val att = jan.join(cust, col("o_custkey") === col("c_custkey"))
+      .select(
+        col("o_orderkey").cast("string").as("id"),
+        struct(col("c_nationkey").cast("long").as("schoolId")).as("schoolReference"),
+        struct(col("c_custkey").cast("string").as("studentUniqueId")).as("studentReference"),
+        col("o_orderdate").cast("string").as("eventDate"),
+        concat(lit("uri://ed-fi.org/AttendanceEventCategoryDescriptor#"),
+          element_at(
+            array(lit("In Attendance"), lit("Tardy"),
+              lit("Excused Absence"), lit("Unexcused Absence")),
+            (col("o_orderkey") % 4 + 1).cast("int")))
+          .as("attendanceEventCategoryDescriptor"))
+
+    // initial delivery vs the CDC batch
+    val attInitial = att.filter(col("id").cast("long") % 3 =!= 0)
+    val attUpserts = att.filter(col("id").cast("long") % 3 === 0)
+    val ssaDelIds = ssa.filter(
+      col("studentReference.studentUniqueId").cast("long") % 17 === 0)
+      .select(col("id"))
+
+    incrementalRefresh(s, scope,
+      scoped = Map(
+        "studentSchoolAssociations" ->
+          (ssa, IncrementalGold.CdcBatch(ssa.limit(0), ssaDelIds)),
+        "studentSchoolAttendanceEvents" ->
+          (attInitial, IncrementalGold.CdcBatch(attUpserts, att.select(col("id")).limit(0)))),
+      shared = Map("calendarDates" -> cal))
+      .orderBy("StudentKey", "SchoolKey", "DateKey")
+  }
+
   /** INCREMENTAL GOLD REFRESH, fact arm: the q27 EWS construction split
     * into an initial delivery (attendance events with orderkey%3 != 0)
     * and a CDC batch (the %3==0 events as upserts keyed by resource id =
@@ -668,89 +623,9 @@ object ViewQueries {
     * anti-join. Oracle = q27's full-view SQL over the FINAL state (all
     * events, enrollment minus the deletes) — hash-exact means
     * incremental(old gold, delta) ≡ full recompute. */
-  /** The shared q341/q344 fixture as a [[PrunedGate]]: enrollment spine +
-    * split attendance delivery + calendar, parameterized by which fact
-    * contract consumes it. */
-  private[graft] def ewsChrabGate(
-      s: SparkSession, dir: String,
-      scope: graft.ops.IncrementalGold.Scope): PrunedGate = {
-    import graft.ops.IncrementalGold
-    {
-      val lake = Lake(s, dir)
-      val cust = lake.customer.select(col("c_custkey"), col("c_nationkey"))
-
-      val ssa = cust.select(
-        col("c_custkey").cast("string").as("id"),
-        struct(col("c_nationkey").cast("long").as("schoolId")).as("schoolReference"),
-        struct(lit(1995L).as("schoolYear")).as("schoolYearTypeReference"),
-        struct(col("c_custkey").cast("string").as("studentUniqueId")).as("studentReference"),
-        lit("1995-01-05").as("entryDate"),
-        when(col("c_custkey") % 10 === 0, "1995-01-20")
-          .otherwise(lit(null).cast("string")).as("exitWithdrawDate"))
-
-      val jan = lake.orders
-        .filter(col("o_orderdate").between("1995-01-01", "1995-01-31"))
-      val cal = jan.select(col("o_orderdate").cast("string").as("date")).distinct()
-        .crossJoin(lake.nation.select(col("n_nationkey")))
-        .select(
-          struct(
-            col("n_nationkey").cast("long").as("schoolId"),
-            lit(1995L).as("schoolYear")).as("calendarReference"),
-          col("date"),
-          array(struct(
-            when(dayofmonth(to_date(col("date"))) % 5 =!= 0,
-              "uri://ed-fi.org/CalendarEventDescriptor#Instructional day")
-              .otherwise("uri://ed-fi.org/CalendarEventDescriptor#Holiday")
-              .as("calendarEventDescriptor"))).as("calendarEvents"))
-
-      val att = jan.join(cust, col("o_custkey") === col("c_custkey"))
-        .select(
-          col("o_orderkey").cast("string").as("id"),
-          struct(col("c_nationkey").cast("long").as("schoolId")).as("schoolReference"),
-          struct(col("c_custkey").cast("string").as("studentUniqueId")).as("studentReference"),
-          col("o_orderdate").cast("string").as("eventDate"),
-          concat(lit("uri://ed-fi.org/AttendanceEventCategoryDescriptor#"),
-            element_at(
-              array(lit("In Attendance"), lit("Tardy"),
-                lit("Excused Absence"), lit("Unexcused Absence")),
-              (col("o_orderkey") % 4 + 1).cast("int")))
-            .as("attendanceEventCategoryDescriptor"))
-
-      // initial delivery vs the CDC batch
-      val attInitial = att.filter(col("id").cast("long") % 3 =!= 0)
-      val attUpserts = att.filter(col("id").cast("long") % 3 === 0)
-      val ssaDelIds = ssa.filter(
-        col("studentReference.studentUniqueId").cast("long") % 17 === 0)
-        .select(col("id"))
-
-      val studentOf = (df: DataFrame) => df("studentReference.studentUniqueId")
-      PrunedGate(scope,
-        scoped = Seq(
-          ScopedEp("studentSchoolAssociations", ssa, studentOf,
-            IncrementalGold.CdcBatch(ssa.limit(0), ssaDelIds)),
-          ScopedEp("studentSchoolAttendanceEvents", attInitial, studentOf,
-            IncrementalGold.CdcBatch(attUpserts, att.select(col("id")).limit(0)))),
-        shared = Map("calendarDates" -> cal),
-        orderCols = Seq("StudentKey", "SchoolKey", "DateKey"))
-    }
-  }
-
-  private[graft] def q341Gate(s: SparkSession, dir: String): PrunedGate =
-    ewsChrabGate(s, dir, graft.ops.IncrementalGold.ewsFactScope)
-  private[graft] def q344Gate(s: SparkSession, dir: String): PrunedGate =
-    ewsChrabGate(s, dir, graft.ops.IncrementalGold.chrabFactScope)
-
   private val q341 = Q(
     "q341_incremental_ews_fact",
-    (s, dir) => {
-      // round-13 migration (VERDICT r12 item 3): scan-bound refreshView →
-      // the FULL pruned loop over both scoped endpoints (enrollment
-      // deletes recover their vacated students from the ssa keymap, not a
-      // corpus scan). Oracle unchanged: hash gate proves pruned ≡ full.
-      val g = q341Gate(s, dir)
-      fullyPrunedRefresh(s, g.scope, g.scoped, g.shared)
-        .orderBy(g.orderCols.map(col): _*)
-    },
+    (s, dir) => ewsChrabRefresh(s, dir, IncrementalGold.ewsFactScope),
     Some("""
       WITH cal AS (
         SELECT n_nationkey AS school_id, d.date_str, d.is_instr
@@ -817,16 +692,7 @@ object ViewQueries {
     * incremental ≡ full recompute for a third of the 41 views. */
   private val q344 = Q(
     "q344_incremental_chrab_fact",
-    (s, dir) => {
-      // round-13 migration (VERDICT r12 item 3): the batchScopes corpus
-      // semi-joins became keymap lookups; the refresh reads/rewrites only
-      // affected buckets. Same fixture as q341 (ewsChrabGate), consumed
-      // through the chrab contract. Oracle unchanged: hash gate proves
-      // pruned ≡ full.
-      val g = q344Gate(s, dir)
-      fullyPrunedRefresh(s, g.scope, g.scoped, g.shared)
-        .orderBy(g.orderCols.map(col): _*)
-    },
+    (s, dir) => ewsChrabRefresh(s, dir, IncrementalGold.chrabFactScope),
     Some("""
       WITH cal AS (
         SELECT DISTINCT n_nationkey AS school_id,
@@ -883,11 +749,10 @@ object ViewQueries {
     * initial delivery). Oracle states the view over the FINAL state —
     * ghosts never appear. Also the q345 gate for the new
     * [[IncrementalGold.sectionGradeFactScope]] contract. */
-  /** q345's fixture as a [[PrunedGate]] (shared with BenchSetup). */
-  private[graft] def q345Gate(s: SparkSession, dir: String): PrunedGate = {
-    import s.implicits._
-    import graft.ops.IncrementalGold
-    {
+  private val q345 = Q(
+    "q345_incremental_section_grade_fact",
+    (s, dir) => {
+      import s.implicits._
       val lake = Lake(s, dir)
       val base = lake.orders.join(
         lake.customer.select(col("c_custkey"), col("c_nationkey")),
@@ -935,28 +800,12 @@ object ViewQueries {
         lit("1995-01-01").as("beginDate"))
       val gpd = Seq((7L, "First")).toDF("gradingPeriodDescriptorId", "codeValue")
 
-      PrunedGate(IncrementalGold.sectionGradeFactScope,
-        scoped = Seq(ScopedEp("grades", snapshot,
-          df => df("studentSectionAssociationReference.studentUniqueId"),
-          IncrementalGold.CdcBatch(upserts, delIds))),
-        shared = Map("gradingPeriods" -> gps, "gradingPeriodDescriptors" -> gpd),
-        orderCols = Seq("StudentKey", "SchoolKey", "GradingPeriodKey",
+      incrementalRefresh(s, IncrementalGold.sectionGradeFactScope,
+        scoped = Map("grades" -> (snapshot, IncrementalGold.CdcBatch(upserts, delIds))),
+        shared = Map("gradingPeriods" -> gps, "gradingPeriodDescriptors" -> gpd))
+        .orderBy("StudentKey", "SchoolKey", "GradingPeriodKey",
           "StudentSectionKey", "SectionKey", "NumericGradeEarned",
-          "LetterGradeEarned", "GradeType"))
-    }
-  }
-
-  private val q345 = Q(
-    "q345_incremental_section_grade_fact",
-    (s, dir) => {
-      // round-13 migration (VERDICT r12 item 3): the re-keying batch's
-      // vacated GHOST scopes now come from the keymap's id-buckets
-      // (q348's proven recovery path), and the refresh is bucket-pruned
-      // end to end. Oracle unchanged: hash gate proves pruned ≡ full —
-      // ghosts never appear.
-      val g = q345Gate(s, dir)
-      fullyPrunedRefresh(s, g.scope, g.scoped, g.shared)
-        .orderBy(g.orderCols.map(col): _*)
+          "LetterGradeEarned", "GradeType")
     },
     Some("""
       SELECT CAST(c_custkey AS VARCHAR) AS StudentKey,
@@ -981,221 +830,6 @@ object ViewQueries {
                SectionKey, NumericGradeEarned, LetterGradeEarned, GradeType""")
   )
 
-  // ---------------------------------------------------------------- q346
-  /** PARTITION-PRUNED incremental refresh (VERDICT r10 item 1b): q340's
-    * schoolDim delta served from a [[IncrementalGold.writeGoldPartitioned]]
-    * layout — gold hash-partitioned on the scope key, the merge reading
-    * ONLY the affected buckets (partition-pruned scan, PlanSpec-pinned)
-    * and rewriting ONLY those partitions via dynamic partition overwrite.
-    * The query round-trips the WHOLE refreshed lake back through the
-    * partitioned layout, so the hash gate proves the pruned path leaves
-    * untouched buckets byte-correct while landing the same final state
-    * as q340's scan-bound merge. Oracle identical to q340's. */
-  private val q346 = Q(
-    "q346_incremental_pruned_school_dim",
-    (s, dir) => {
-      import graft.ops.IncrementalGold
-      val lake = Lake(s, dir)
-      val cust = lake.customer.select(
-        col("c_custkey"), col("c_nationkey"), col("c_name"), col("c_mktsegment"))
-
-      def schoolRows(df: DataFrame, renamed: Boolean): DataFrame = df.select(
-        col("c_custkey").cast("string").as("id"),
-        col("c_custkey").cast("long").as("schoolId"),
-        (if (renamed) concat(col("c_name"), lit(" (renamed)"))
-         else col("c_name")).as("nameOfInstitution"),
-        lit("uri://ed-fi.org/SchoolTypeDescriptor#Regular")
-          .as("schoolTypeDescriptor"),
-        struct(col("c_nationkey").cast("long").as("localEducationAgencyId"))
-          .as("localEducationAgencyReference"),
-        array(struct(
-          when(col("c_custkey") % 5 === 0,
-            "uri://ed-fi.org/AddressTypeDescriptor#Mailing")
-            .otherwise("uri://ed-fi.org/AddressTypeDescriptor#Physical")
-            .as("addressTypeDescriptor"),
-          lit("uri://ed-fi.org/StateAbbreviationDescriptor#TX")
-            .as("stateAbbreviationDescriptor"),
-          concat(col("c_custkey").cast("string"), lit(" Main St"))
-            .as("streetNumberName"),
-          col("c_mktsegment").as("city"),
-          lit("Central").as("nameOfCounty"))).as("addresses"))
-
-      val leas = lake.nation.select(
-        col("n_nationkey").cast("long").as("localEducationAgencyId"),
-        col("n_name").as("nameOfInstitution"),
-        struct(lit(null).cast("long").as("educationServiceCenterId"))
-          .as("educationServiceCenterReference"))
-
-      val snapshot = schoolRows(cust, renamed = false)
-      val upserts = schoolRows(cust.filter(col("c_custkey") % 7 === 3),
-        renamed = true)
-      val delIds = cust
-        .filter(col("c_custkey") % 13 === 5 && col("c_custkey") % 7 =!= 3)
-        .select(col("c_custkey").cast("string").as("id"))
-
-      val oldGold = ctxWith(s, Map(
-        "schools" -> snapshot, "localEducationAgencies" -> leas))
-        .view("schoolDim")
-      val tmp = java.nio.file.Files.createTempDirectory("graft-q346").toString
-      SilverWriter.deleteOnExit(tmp)
-      val goldPath = s"$tmp/gold"
-      IncrementalGold.writeGoldPartitioned(
-        oldGold, IncrementalGold.schoolDimScope, goldPath, nBuckets = 16)
-
-      val batch = IncrementalGold.CdcBatch(upserts, delIds)
-      val newSchools = IncrementalGold.applyCdc(snapshot, batch)
-      val affected = IncrementalGold.batchScopes(
-        snapshot, batch, df => df("schoolId"))
-
-      IncrementalGold.refreshViewPruned(
-        IncrementalGold.schoolDimScope, goldPath, s"$tmp/staging",
-        nBuckets = 16,
-        newEndpoint = {
-          case "schools" => newSchools
-          case "localEducationAgencies" => leas
-          case other => emptyEndpoint(s, other)
-        },
-        affected = affected)
-
-      Lake.open(s, goldPath)
-        .drop(IncrementalGold.BucketCol)
-        .orderBy("SchoolKey")
-    },
-    Some("""
-      SELECT CAST(c_custkey AS VARCHAR) AS SchoolKey,
-             CASE WHEN c_custkey % 7 = 3 THEN c_name || ' (renamed)'
-                  ELSE c_name END AS SchoolName,
-             'Regular' AS SchoolType,
-             CAST(c_custkey AS VARCHAR) || ' Main St, ' || c_mktsegment
-               || ' TX Central' AS SchoolAddress,
-             c_mktsegment AS SchoolCity,
-             'Central' AS SchoolCounty,
-             'TX' AS SchoolState,
-             n_name AS LocalEducationAgencyName,
-             CAST(c_nationkey AS VARCHAR) AS LocalEducationAgencyKey,
-             '' AS StateEducationAgencyName,
-             '' AS StateEducationAgencyKey,
-             '' AS EducationServiceCenterName,
-             '' AS EducationServiceCenterKey
-      FROM customer LEFT JOIN nation ON c_nationkey = n_nationkey
-      WHERE c_custkey % 5 <> 0
-        AND NOT (c_custkey % 13 = 5 AND c_custkey % 7 <> 3)
-      ORDER BY SchoolKey""")
-  )
-
-  // ---------------------------------------------------------------- q348
-  /** FULLY PRUNED incremental refresh (VERDICT r11 item 1b): q346's
-    * schoolDim delta with the ENDPOINT side pruned too — the schools
-    * snapshot laid out scope-partitioned
-    * ([[IncrementalGold.writeEndpointPartitioned]]) with an id→scope
-    * keymap sidecar ([[IncrementalGold.writeKeyMap]]), so the whole
-    * refresh loop touches only affected buckets: scope recovery reads
-    * the delta ids' keymap buckets (not the corpus), the endpoint and
-    * keymap layouts advance by rewriting only affected buckets, and the
-    * view rebuild reads the refreshed endpoint partition-pruned. q346
-    * left the endpoint scans corpus-bound; this gate proves the pruned
-    * loop end-to-end — hash-exact against the same full-recompute
-    * oracle. */
-  private val q348 = Q(
-    "q348_incremental_fully_pruned_school_dim",
-    (s, dir) => {
-      import graft.ops.IncrementalGold
-      val lake = Lake(s, dir)
-      val cust = lake.customer.select(
-        col("c_custkey"), col("c_nationkey"), col("c_name"), col("c_mktsegment"))
-
-      def schoolRows(df: DataFrame, renamed: Boolean): DataFrame = df.select(
-        col("c_custkey").cast("string").as("id"),
-        col("c_custkey").cast("long").as("schoolId"),
-        (if (renamed) concat(col("c_name"), lit(" (renamed)"))
-         else col("c_name")).as("nameOfInstitution"),
-        lit("uri://ed-fi.org/SchoolTypeDescriptor#Regular")
-          .as("schoolTypeDescriptor"),
-        struct(col("c_nationkey").cast("long").as("localEducationAgencyId"))
-          .as("localEducationAgencyReference"),
-        array(struct(
-          when(col("c_custkey") % 5 === 0,
-            "uri://ed-fi.org/AddressTypeDescriptor#Mailing")
-            .otherwise("uri://ed-fi.org/AddressTypeDescriptor#Physical")
-            .as("addressTypeDescriptor"),
-          lit("uri://ed-fi.org/StateAbbreviationDescriptor#TX")
-            .as("stateAbbreviationDescriptor"),
-          concat(col("c_custkey").cast("string"), lit(" Main St"))
-            .as("streetNumberName"),
-          col("c_mktsegment").as("city"),
-          lit("Central").as("nameOfCounty"))).as("addresses"))
-
-      val leas = lake.nation.select(
-        col("n_nationkey").cast("long").as("localEducationAgencyId"),
-        col("n_name").as("nameOfInstitution"),
-        struct(lit(null).cast("long").as("educationServiceCenterId"))
-          .as("educationServiceCenterReference"))
-
-      val snapshot = schoolRows(cust, renamed = false)
-      val upserts = schoolRows(cust.filter(col("c_custkey") % 7 === 3),
-        renamed = true)
-      val delIds = cust
-        .filter(col("c_custkey") % 13 === 5 && col("c_custkey") % 7 =!= 3)
-        .select(col("c_custkey").cast("string").as("id"))
-
-      val oldGold = ctxWith(s, Map(
-        "schools" -> snapshot, "localEducationAgencies" -> leas))
-        .view("schoolDim")
-      val tmp = java.nio.file.Files.createTempDirectory("graft-q348").toString
-      SilverWriter.deleteOnExit(tmp)
-      val nBuckets = 16
-      val scopeOf = (df: DataFrame) => df("schoolId")
-      IncrementalGold.writeEndpointPartitioned(
-        snapshot, scopeOf, s"$tmp/schools", nBuckets)
-      IncrementalGold.writeKeyMap(snapshot, scopeOf, s"$tmp/keymap", nBuckets)
-      IncrementalGold.writeGoldPartitioned(
-        oldGold, IncrementalGold.schoolDimScope, s"$tmp/gold", nBuckets)
-
-      val batch = IncrementalGold.CdcBatch(upserts, delIds)
-      val affected = IncrementalGold.batchScopesPruned(
-        s, s"$tmp/keymap", nBuckets, batch, scopeOf)
-
-      IncrementalGold.refreshEndpointPartitioned(
-        s, s"$tmp/schools", s"$tmp/stage-ep", nBuckets, batch, scopeOf, affected)
-      IncrementalGold.refreshKeyMap(
-        s, s"$tmp/keymap", s"$tmp/stage-km", nBuckets, batch, scopeOf)
-      IncrementalGold.refreshViewPruned(
-        IncrementalGold.schoolDimScope, s"$tmp/gold", s"$tmp/stage-gold",
-        nBuckets,
-        newEndpoint = {
-          case "schools" => IncrementalGold.readEndpointPruned(
-            s, s"$tmp/schools", nBuckets, affected)
-          case "localEducationAgencies" => leas
-          case other => emptyEndpoint(s, other)
-        },
-        affected = affected)
-
-      Lake.open(s, s"$tmp/gold")
-        .drop(IncrementalGold.BucketCol)
-        .orderBy("SchoolKey")
-    },
-    Some("""
-      SELECT CAST(c_custkey AS VARCHAR) AS SchoolKey,
-             CASE WHEN c_custkey % 7 = 3 THEN c_name || ' (renamed)'
-                  ELSE c_name END AS SchoolName,
-             'Regular' AS SchoolType,
-             CAST(c_custkey AS VARCHAR) || ' Main St, ' || c_mktsegment
-               || ' TX Central' AS SchoolAddress,
-             c_mktsegment AS SchoolCity,
-             'Central' AS SchoolCounty,
-             'TX' AS SchoolState,
-             n_name AS LocalEducationAgencyName,
-             CAST(c_nationkey AS VARCHAR) AS LocalEducationAgencyKey,
-             '' AS StateEducationAgencyName,
-             '' AS StateEducationAgencyKey,
-             '' AS EducationServiceCenterName,
-             '' AS EducationServiceCenterKey
-      FROM customer LEFT JOIN nation ON c_nationkey = n_nationkey
-      WHERE c_custkey % 5 <> 0
-        AND NOT (c_custkey % 13 = 5 AND c_custkey % 7 <> 3)
-      ORDER BY SchoolKey""")
-  )
-
   // ------------------------------------------------------------ q349/q350
   /** Shared fixture for the allStudentSchoolDim → studentSchoolDim
     * incremental chain: customers are students at their nation's school
@@ -1208,15 +842,12 @@ object ViewQueries {
     * three scoped endpoints: grade-level upserts on the enrollment spine
     * (%7==3), sex re-statements on the school-level demographics
     * (%22==8), and student DELETES via the `/deletes` id feed (%13==5,
-    * scope recovered from the pre-delta snapshot). */
-  private final case class StudentChain(
-      students: DataFrame, schools: DataFrame, ssa: DataFrame,
-      edorg: DataFrame, studentsBatch: graft.ops.IncrementalGold.CdcBatch,
-      ssaBatch: graft.ops.IncrementalGold.CdcBatch,
-      edorgBatch: graft.ops.IncrementalGold.CdcBatch)
-
-  private def studentChainFixture(s: SparkSession, dir: String): StudentChain = {
-    import graft.ops.IncrementalGold.CdcBatch
+    * scope recovered from the pre-delta snapshot). Returns the scoped
+    * endpoints with their batches and the shared schools, the
+    * [[incrementalRefresh]] inputs. */
+  private def studentChainFixture(s: SparkSession, dir: String)
+      : (Map[String, (DataFrame, IncrementalGold.CdcBatch)], Map[String, DataFrame]) = {
+    import IncrementalGold.CdcBatch
     val lake = Lake(s, dir)
     val cust = lake.customer.select(
       col("c_custkey"), col("c_nationkey"), col("c_name"))
@@ -1285,41 +916,18 @@ object ViewQueries {
       .unionByName(edorgDistrict(cust.filter(col("c_custkey") % 3 === 0)))
 
     val none = (df: DataFrame) => df.select(col("id")).limit(0)
-    StudentChain(
-      students, schools, ssa, edorg,
-      studentsBatch = CdcBatch(
+    (Map(
+      "students" -> (students, CdcBatch(
         students.limit(0),
         students.filter(col("studentUniqueId").cast("long") % 13 === 5)
-          .select(col("id"))),
-      ssaBatch = CdcBatch(
+          .select(col("id")))),
+      "studentSchoolAssociations" -> (ssa, CdcBatch(
         ssaRows(cust.filter(col("c_custkey") % 7 === 3), true),
-        none(ssa)),
-      edorgBatch = CdcBatch(
+        none(ssa))),
+      "studentEducationOrganizationAssociations" -> (edorg, CdcBatch(
         edorgSchool(cust.filter(col("c_custkey") % 22 === 8), Some("Other")),
-        none(edorg)))
-  }
-
-  /** The post-CDC endpoint resolver + affected-scope set for the chain. */
-  private def studentChainRefresh(
-      s: SparkSession, fx: StudentChain): (String => DataFrame, DataFrame) = {
-    import graft.ops.IncrementalGold
-    val newStudents = IncrementalGold.applyCdc(fx.students, fx.studentsBatch)
-    val newSsa = IncrementalGold.applyCdc(fx.ssa, fx.ssaBatch)
-    val newEdorg = IncrementalGold.applyCdc(fx.edorg, fx.edorgBatch)
-    val studentRef = (df: DataFrame) => df("studentReference.studentUniqueId")
-    val affected = IncrementalGold
-      .batchScopes(fx.students, fx.studentsBatch, df => df("studentUniqueId"))
-      .unionByName(IncrementalGold.batchScopes(fx.ssa, fx.ssaBatch, studentRef))
-      .unionByName(IncrementalGold.batchScopes(fx.edorg, fx.edorgBatch, studentRef))
-      .distinct()
-    val resolve: String => DataFrame = {
-      case "students" => newStudents
-      case "studentSchoolAssociations" => newSsa
-      case "studentEducationOrganizationAssociations" => newEdorg
-      case "schools" => fx.schools
-      case other => emptyEndpoint(s, other)
-    }
-    (resolve, affected)
+        none(edorg)))),
+      Map("schools" -> schools))
   }
 
   private val studentChainOracleBody = """
@@ -1375,16 +983,8 @@ object ViewQueries {
   private val q349 = Q(
     "q349_incremental_all_student_school_dim",
     (s, dir) => {
-      import graft.ops.IncrementalGold
-      val fx = studentChainFixture(s, dir)
-      val oldGold = ctxWith(s, Map(
-        "students" -> fx.students, "schools" -> fx.schools,
-        "studentSchoolAssociations" -> fx.ssa,
-        "studentEducationOrganizationAssociations" -> fx.edorg))
-        .view("allStudentSchoolDim")
-      val (resolve, affected) = studentChainRefresh(s, fx)
-      IncrementalGold.refreshView(
-        IncrementalGold.allStudentSchoolDimScope, oldGold, resolve, affected)
+      val (scoped, shared) = studentChainFixture(s, dir)
+      incrementalRefresh(s, IncrementalGold.allStudentSchoolDimScope, scoped, shared)
         .orderBy("StudentKey", "SchoolKey")
     },
     Some(s"""
@@ -1407,16 +1007,8 @@ object ViewQueries {
   private val q350 = Q(
     "q350_incremental_student_school_dim_chain",
     (s, dir) => {
-      import graft.ops.IncrementalGold
-      val fx = studentChainFixture(s, dir)
-      val oldGold = ctxWith(s, Map(
-        "students" -> fx.students, "schools" -> fx.schools,
-        "studentSchoolAssociations" -> fx.ssa,
-        "studentEducationOrganizationAssociations" -> fx.edorg))
-        .view("studentSchoolDim")
-      val (resolve, affected) = studentChainRefresh(s, fx)
-      IncrementalGold.refreshView(
-        IncrementalGold.studentSchoolDimScope, oldGold, resolve, affected)
+      val (scoped, shared) = studentChainFixture(s, dir)
+      incrementalRefresh(s, IncrementalGold.studentSchoolDimScope, scoped, shared)
         .orderBy("StudentKey", "SchoolKey")
     },
     Some(s"""
@@ -1427,6 +1019,6 @@ object ViewQueries {
       ORDER BY StudentKey, SchoolKey""")
   )
 
-  val all: Seq[Q] = Seq(q27, q28, q43, q49, q53, q340, q341, q344, q345, q346,
-    q348, q349, q350)
+  val all: Seq[Q] = Seq(q27, q28, q43, q49, q53, q340, q341, q344, q345,
+    q349, q350)
 }

@@ -35,21 +35,6 @@ import org.apache.spark.sql.SparkSession
   */
 object AmtLoop {
 
-  /** Digest of the silver tree for one school year: every regular file's
-    * (relative path, size, mtime), sorted, md5'd. Missing directory → the
-    * distinguished "absent" fingerprint (still comparable/stable). */
-  def silverFingerprint(silverRoot: String, schoolYear: String): String = {
-    val root = Paths.get(silverRoot, schoolYear)
-    if (!Files.isDirectory(root)) return "absent"
-    val entries = Files.walk(root).iterator().asScala
-      .filter(Files.isRegularFile(_))
-      .map(p => s"${root.relativize(p)}|${Files.size(p)}|${Files.getLastModifiedTime(p).toMillis}")
-      .toSeq.sorted
-    val md = MessageDigest.getInstance("MD5")
-    entries.foreach(e => md.update(e.getBytes("UTF-8")))
-    md.digest().map("%02x".format(_)).mkString
-  }
-
   /** Per-ENDPOINT digests for one year: silver directory name → md5 of its
     * files' (name, size, mtime). The unit of change detection — a delta
     * delivery touches few endpoints, and only views reachable from those

@@ -20,8 +20,7 @@ import graft.core.{GraftSession, SilverWriter}
   *   - `time <query>…` — dedicated-JVM timing, 3 cold samples per query
   *     after a warm-up at sf0.001. Queries that [[BenchSetup]] overrides
   *     run in their production shape (artifacts materialized untimed
-  *     first, and restored untimed before every sample), matching the
-  *     bench. One line:
+  *     first), matching the bench. One line:
   *     `{"probe":"time-query","sf":…,"<query>":[s,s,s],…}` — the shape
   *     `BenchRecheck.dedicatedSamples` parses. It is the cross-check
   *     BENCH_NOTES prescribes before believing a surprising in-suite
@@ -106,15 +105,12 @@ object Measure {
 
   def time(spark: SparkSession, sfDir: String, names: Seq[String]): String = {
     val setupDir = Files.createTempDirectory("graft-measure-time").toString
-    val (overrides, _, restore) = BenchSetup.materialize(spark, sfDir, setupDir)
+    val (overrides, _) = BenchSetup.materialize(spark, sfDir, setupDir)
     val fns = SparkEntry.queries ++ overrides
     val results = names.map { name =>
       val fn = fns.getOrElse(name, sys.error(s"unknown query: $name"))
       noop(fn(spark, s"$testdata/sf0.001")) // JIT/classload warmup
-      val secs = (1 to 3).map { _ =>
-        restore(name) // untimed: every sample starts from the same state
-        samples(spark, 1)(noop(fn(spark, sfDir))).head
-      }
+      val secs = samples(spark, 3)(noop(fn(spark, sfDir)))
       s""""$name":[${secs.map(v => f"$v%.3f").mkString(",")}]"""
     }
     SilverWriter.deleteOnExit(setupDir)

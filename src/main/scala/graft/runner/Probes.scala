@@ -16,8 +16,8 @@ import graft.runner.Measure.{minOf, noop, sfDir}
   *
   *   - `concurrency` — writeAll at 1/2/4/8 writer threads.
   *   - `scale [k]` — the view spine at k× students (skew).
-  *   - `incremental-gold [students1x] [deltaStudents] [targetBucketKB]
-  *     [deleteCount]` — full vs incremental vs pruned gold refresh.
+  *   - `incremental-gold [students1x] [deltaStudents] [deleteCount]` —
+  *     full rebuild vs incremental gold refresh.
   *   - `dedup-scale [replicas]` — q169/q171/q306 growth factors. */
 object Probes {
   def run(spark: SparkSession, name: String, args: Seq[String]): Unit = {
@@ -26,7 +26,7 @@ object Probes {
       case "concurrency" => concurrency(spark)
       case "scale" => scale(spark, arg(0, 10).toInt)
       case "incremental-gold" =>
-        incrementalGold(spark, arg(0, 100000L), arg(1, 1000L), arg(2, 0L), arg(3, 200L))
+        incrementalGold(spark, arg(0, 100000L), arg(1, 1000L), arg(2, 200L))
       case "dedup-scale" => dedupScale(spark, arg(0, 10).toInt)
       case other => sys.error(s"unknown probe: $other")
     }
@@ -96,33 +96,26 @@ object Probes {
     Stats.keySkew(enr, "schoolId", topN = 3).show(false)
   }
 
-  /** Where does [[IncrementalGold]]'s pruned refresh beat a full rebuild?
-    * The EWS fact advanced by a FIXED-SIZE change batch against a student
-    * corpus at 1× and 10×, three arms:
+  /** How does [[IncrementalGold.refreshView]] grow against a full
+    * rebuild? The EWS fact advanced by a FIXED-SIZE change batch against a
+    * student corpus at 1× and 10×, two arms:
     *
     *   - `full`: recompute the whole view over the post-CDC endpoints;
     *   - `incr`: [[IncrementalGold.refreshView]] — rebuild only the
     *     affected students' slice and anti-merge it into the old gold
-    *     (shuffle-free but scan-bound: every corpus parquet read whole);
-    *   - `pruned`: scope-partitioned gold and endpoint snapshots plus the
-    *     keymap sidecar, the merge reading only affected buckets.
+    *     (shuffle-free but scan-bound: every corpus parquet read whole).
     *
-    * Bucket count B: `targetBucketKB` 0 keeps the constant-students rule
-    * (B = corpus/400, so the r12 numbers reproduce); otherwise B = largest
-    * layout bytes / target, so files are production-sized. A delta of k
-    * students touches ≈ B·(1−(1−1/B)^k) buckets; the probe prints the
-    * touched count, layout MB and per-bucket file KB with the arm times.
-    * Standing state (old gold, snapshots, keymap) is untimed.
+    * The probe prints the layout MB with the arm times. Standing state
+    * (old gold, endpoint snapshots) is untimed.
     *
     * Fixture: student i enrolled at school i%25, a 31-day January-1995
     * calendar (every 5th day a holiday), 4 attendance events per student.
     * The batch upserts 4 fresh events for `deltaStudents` students and
     * deletes `deleteCount` enrollments through the `/deletes` id feed.
-    * Results: IncrementalGold's scaladoc and BENCH_NOTES "r12:
-    * IncrementalGoldProbe". */
+    * Results: IncrementalGold's scaladoc and BENCH_NOTES "Incremental
+    * gold: one refresh path". */
   private def incrementalGold(
-      spark: SparkSession, n1x: Long, deltaStudents: Long, targetBucketKB: Long,
-      deleteCount: Long): Unit = {
+      spark: SparkSession, n1x: Long, deltaStudents: Long, deleteCount: Long): Unit = {
     def ssaRows(until: Long): DataFrame = spark.range(0L, until).select(
       col("id").cast("string").as("id"),
       struct((col("id") % 25).as("schoolId")).as("schoolReference"),
@@ -181,16 +174,7 @@ object Probes {
       val att = Lake.open(spark, attPath)
       buildOver(ssa, att).write.mode("overwrite").parquet(goldPath)
       val oldGold = Lake.open(spark, goldPath)
-      // one shared B keeps every layout's bucket column aligned; the bytes
-      // rule sizes it off the LARGEST layout (gold dominates)
       val layoutBytes = Seq(ssaPath, attPath, goldPath).map(dirBytes)
-      val nBuckets =
-        if (targetBucketKB <= 0L) math.max(64L, n / 400L).toInt
-        else math.max(4L, layoutBytes.max / (targetBucketKB * 1024L)).toInt
-      IncrementalGold.writeEndpointPartitioned(ssa, studentOf, s"$tmp/ssa_p_$x", nBuckets)
-      IncrementalGold.writeEndpointPartitioned(att, studentOf, s"$tmp/att_p_$x", nBuckets)
-      IncrementalGold.writeKeyMap(ssa, studentOf, s"$tmp/km_$x", nBuckets)
-      IncrementalGold.writeGoldPartitioned(oldGold, scope, s"$tmp/gold_p_$x", nBuckets)
 
       // ---- the fixed-size CDC batch (same absolute size at every scale)
       val attUpserts = attRows(deltaStudents, 1L)
@@ -208,37 +192,12 @@ object Probes {
         noop(IncrementalGold.refreshView(scope, oldGold,
           newEndpoint = spineOver(newSsa, newAtt), affected = affected))
       }
-      def runPruned(): Unit = {
-        val affected = attUpserts.select(studentOf(attUpserts).cast("string").as("scope"))
-          .unionByName(IncrementalGold.batchScopesPruned(
-            spark, s"$tmp/km_$x", nBuckets, ssaBatch, studentOf))
-          .distinct()
-        noop(IncrementalGold.prunedMerge(scope, s"$tmp/gold_p_$x", nBuckets,
-          newEndpoint = {
-            case "calendarDates" => cal
-            case "studentSchoolAssociations" => IncrementalGold.postCdcSlicePruned(
-              spark, s"$tmp/ssa_p_$x", nBuckets, ssaBatch, affected)
-            case "studentSchoolAttendanceEvents" => IncrementalGold.postCdcSlicePruned(
-              spark, s"$tmp/att_p_$x", nBuckets, attBatch, affected)
-            case other => emptyEndpoint(spark, other)
-          },
-          affected = affected))
-      }
-
-      runFull(); runIncr(); runPruned() // warm plan paths
+      runFull(); runIncr() // warm plan paths
       val fu = minOf(spark, 3)(runFull())
       val in = minOf(spark, 3)(runIncr())
-      val pr = minOf(spark, 3)(runPruned())
-      // the prune-factor evidence: how many of B buckets this delta hits
-      val touched = attUpserts.select(studentOf(attUpserts).cast("string").as("s"))
-        .unionByName(IncrementalGold.lookupScopes(
-          spark, s"$tmp/km_$x", nBuckets, ssaDelIds).toDF("s"))
-        .select(IncrementalGold.scopeBucket(col("s"), nBuckets))
-        .distinct().count()
-      val prunedBytes = Seq("ssa_p", "att_p", "gold_p").map(l => dirBytes(s"$tmp/${l}_$x"))
-      f""""x$x":{"students":$n,"nBuckets":$nBuckets,"touchedBuckets":$touched,"layout_mb":[${layoutBytes.map(b => f"${b / 1e6}%.1f").mkString(",")}],"bucket_file_kb":[${prunedBytes.map(b => f"${b / 1024.0 / nBuckets}%.1f").mkString(",")}],"full":$fu%.3f,"incr":$in%.3f,"pruned":$pr%.3f}"""
+      f""""x$x":{"students":$n,"layout_mb":[${layoutBytes.map(b => f"${b / 1e6}%.1f").mkString(",")}],"full":$fu%.3f,"incr":$in%.3f}"""
     }
-    println(s"""{"probe":"incremental-gold","deltaStudents":$deltaStudents,"deleteCount":$deleteCount,"targetBucketKB":$targetBucketKB,${results.mkString(",")}}""")
+    println(s"""{"probe":"incremental-gold","deltaStudents":$deltaStudents,"deleteCount":$deleteCount,${results.mkString(",")}}""")
   }
 
   /** How do the dedup heavyweights grow at N× corpus? q169 shared spans,

@@ -1445,9 +1445,9 @@ class AmtViewsSpec extends SparkTestBase {
       "[]")
     assert(AmtLoop.runOnce(spark, silver.toString, gold, "2022"))
     assert(!AmtLoop.runOnce(spark, silver.toString, gold, "2022"))
-    // missing silver year: stable "absent" fingerprint, builds once (empty
+    // missing silver year: no endpoint fingerprints, builds once (empty
     // frames), then no-ops
-    assert(AmtLoop.silverFingerprint(silver.toString, "1999") == "absent")
+    assert(AmtLoop.endpointFingerprints(silver.toString, "1999") == Map.empty)
     assert(AmtLoop.runOnce(spark, silver.toString, gold, "1999"))
     assert(!AmtLoop.runOnce(spark, silver.toString, gold, "1999"))
   }

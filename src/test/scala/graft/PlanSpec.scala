@@ -685,8 +685,8 @@ class PlanSpec extends SparkTestBase {
 
   test("incremental gold refresh: corpus sides cross ZERO shuffle exchanges") {
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
     import graft.ops.IncrementalGold
     import graft.views.ViewContext
 
@@ -734,6 +734,56 @@ class PlanSpec extends SparkTestBase {
           graft.core.EndpointCatalog.schema(n)),
       affected = affected)
 
+    // second input, the multi-endpoint shape: the EWS fact with TWO scoped
+    // parquet corpora (enrollment spine + attendance events) and the
+    // calendar as a shared dimension; the delta is new attendance for 3
+    // students and 2 enrollment deletes against 2000 students
+    def ssaRows(ids: DataFrame): DataFrame = ids.select(
+      col("id").cast("string").as("id"),
+      struct((col("id") % 5).as("schoolId")).as("schoolReference"),
+      struct(lit(1995L).as("schoolYear")).as("schoolYearTypeReference"),
+      struct(col("id").cast("string").as("studentUniqueId")).as("studentReference"),
+      lit("1995-01-05").as("entryDate"),
+      lit(null).cast("string").as("exitWithdrawDate"))
+    def attRows(ids: DataFrame, gen: String): DataFrame = ids.select(
+      concat(lit(gen), col("id").cast("string")).as("id"),
+      struct((col("id") % 5).as("schoolId")).as("schoolReference"),
+      struct(col("id").cast("string").as("studentUniqueId")).as("studentReference"),
+      lit("1995-01-10").as("eventDate"),
+      lit("uri://ed-fi.org/AttendanceEventCategoryDescriptor#Tardy")
+        .as("attendanceEventCategoryDescriptor"))
+    val cal = spark.range(0, 5).select(
+      struct(col("id").as("schoolId"), lit(1995L).as("schoolYear"))
+        .as("calendarReference"),
+      lit("1995-01-10").as("date"),
+      array(struct(lit("uri://ed-fi.org/CalendarEventDescriptor#Instructional day")
+        .as("calendarEventDescriptor"))).as("calendarEvents"))
+    ssaRows(spark.range(0, 2000).toDF("id")).write.parquet(s"$wh/ssa")
+    attRows(spark.range(0, 2000).toDF("id"), "a-").write.parquet(s"$wh/att")
+    val ssa = spark.read.parquet(s"$wh/ssa")
+    val att = spark.read.parquet(s"$wh/att")
+    def ewsEndpoints(ssaDf: DataFrame, attDf: DataFrame): String => DataFrame = {
+      case "studentSchoolAssociations" => ssaDf
+      case "studentSchoolAttendanceEvents" => attDf
+      case "calendarDates" => cal
+      case n => spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        graft.core.EndpointCatalog.schema(n))
+    }
+    val ews = IncrementalGold.ewsFactScope
+    ews.view.build(ViewContext(spark, endpoint = ewsEndpoints(ssa, att),
+      view = n => fail(s"unexpected view dep: $n"))).write.parquet(s"$wh/ews_gold")
+    val ssaBatch = IncrementalGold.CdcBatch(ssa.limit(0),
+      spark.range(100, 102).select(col("id").cast("string").as("id")))
+    val attBatch = IncrementalGold.CdcBatch(
+      attRows(spark.range(0, 3).toDF("id"), "b-"), att.select(col("id")).limit(0))
+    val ewsPost = ewsEndpoints(
+      IncrementalGold.applyCdc(ssa, ssaBatch), IncrementalGold.applyCdc(att, attBatch))
+    val studentOf = ews.scopedEndpoints("studentSchoolAssociations")
+    val ewsMerged = IncrementalGold.refreshView(
+      ews, spark.read.parquet(s"$wh/ews_gold"), ewsPost,
+      IncrementalGold.batchScopes(ssa, ssaBatch, studentOf)
+        .unionByName(IncrementalGold.batchScopes(att, attBatch, studentOf)))
+
     // AQE off for this assertion: the structural walk needs a plain tree
     val aqe = spark.conf.get("spark.sql.adaptive.enabled")
     try {
@@ -778,397 +828,34 @@ class PlanSpec extends SparkTestBase {
       assert(byKey("7") == "S7!")
       assert(byKey("777") == "S777")
       assert(!byKey.contains("105"))
-    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
-  }
 
-  test("pruned incremental gold: merge reads only affected buckets; untouched partitions never rewritten") {
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    import graft.ops.IncrementalGold
-
-    val wh = java.nio.file.Files.createTempDirectory("incr-gold-pruned").toString
-    def schoolsFrame(ids: DataFrame): DataFrame = ids.select(
-      col("id").cast("string").as("id"),
-      col("id").cast("long").as("schoolId"),
-      concat(lit("S"), col("id")).as("nameOfInstitution"),
-      lit("uri://ed-fi.org/SchoolTypeDescriptor#Regular").as("schoolTypeDescriptor"),
-      struct(lit(1L).as("localEducationAgencyId")).as("localEducationAgencyReference"),
-      array(struct(
-        lit("uri://ed-fi.org/AddressTypeDescriptor#Physical").as("addressTypeDescriptor"),
-        lit("uri://ed-fi.org/StateAbbreviationDescriptor#TX").as("stateAbbreviationDescriptor"),
-        lit("1 Main St").as("streetNumberName"),
-        lit("Metro").as("city"),
-        lit("Central").as("nameOfCounty"))).as("addresses"))
-    val lea = Seq((1L, "LEA")).toDF("localEducationAgencyId", "nameOfInstitution")
-      .withColumn("educationServiceCenterReference",
-        struct(lit(null).cast("long").as("educationServiceCenterId")))
-    schoolsFrame(spark.range(0, 2000).toDF("id")).write.parquet(s"$wh/schools")
-    val snapshot = spark.read.parquet(s"$wh/schools")
-    def endpointFor(schools: DataFrame): String => DataFrame =
-      n => if (n == "schools") schools
-        else if (n == "localEducationAgencies") lea
-        else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          graft.core.EndpointCatalog.schema(n))
-    val ctx = graft.views.ViewContext(spark,
-      endpoint = endpointFor(snapshot),
-      view = n => fail(s"unexpected view dep: $n"))
-    val goldPath = s"$wh/gold"
-    val nBuckets = 16
-    IncrementalGold.writeGoldPartitioned(
-      graft.views.base.SchoolDim.build(ctx),
-      IncrementalGold.schoolDimScope, goldPath, nBuckets)
-
-    val upserts = schoolsFrame(spark.range(0, 3).toDF("id"))
-      .withColumn("nameOfInstitution", concat(col("nameOfInstitution"), lit("!")))
-    val delIds = spark.range(100, 102).select(col("id").cast("string").as("id"))
-    val batch = IncrementalGold.CdcBatch(upserts, delIds)
-    val newSchools = IncrementalGold.applyCdc(snapshot, batch)
-    val affected = IncrementalGold.batchScopes(
-      snapshot, batch, df => df("schoolId"))
-    // the five affected scopes' distinct buckets — what the prune must hit
-    val expectBuckets = Seq(0L, 1L, 2L, 100L, 101L).map(_.toString)
-      .toDF("s").select(IncrementalGold.scopeBucket(col("s"), nBuckets))
-      .distinct().collect().map(_.getInt(0)).toSet
-
-    def goldFiles(): Map[String, Long] = {
-      val root = java.nio.file.Paths.get(goldPath)
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(root).iterator().asScala
-        .filter(p => p.toString.endsWith(".parquet"))
-        .map(p => root.relativize(p).toString -> java.nio.file.Files.size(p))
-        .toMap
-    }
-    val before = goldFiles()
-
-    // physical pin: the old-gold scan under the pruned merge is
-    // DIR-TARGETED — its file index holds ONLY the affected buckets'
-    // directories (r12: the read selects bucket dirs up front, so the
-    // corpus is never read OR LISTED whole; an O(B) partition listing
-    // per refresh was itself a scaling cost). Stronger than the old
-    // partition-filter pin: pruning is by construction, not post-listing.
-    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      val merged = IncrementalGold.prunedMerge(
-        IncrementalGold.schoolDimScope, goldPath, nBuckets,
-        endpointFor(newSchools), affected)
-      val goldScans = merged.queryExecution.executedPlan.collect {
-        case f: FileSourceScanExec
-            if f.relation.location.rootPaths.exists(_.toString.contains("/gold")) => f
+      // the EWS refresh: both scoped-endpoint corpora and the old gold are
+      // scanned, and every operator a corpus-sized stream passes is a
+      // broadcast LEFT ANTI join until a broadcast LEFT SEMI join cuts it
+      // to delta size — no exchange (shuffle or broadcast) and no other
+      // join ever carries a corpus
+      val ewsPlan = ewsMerged.queryExecution.executedPlan
+      Seq("ssa", "att", "ews_gold").foreach { d =>
+        assert(ewsPlan.collect {
+          case f: FileSourceScanExec
+              if f.relation.location.rootPaths.exists(_.toString.contains(s"$wh/$d")) => f
+        }.nonEmpty, s"$d corpus scan missing from the EWS refresh:\n$ewsPlan")
       }
-      assert(goldScans.nonEmpty, "old-gold scan missing from the pruned merge")
-      goldScans.foreach { f =>
-        val roots = f.relation.location.rootPaths.map(_.getName)
-        assert(roots.forall(_.startsWith(s"${IncrementalGold.BucketCol}=")),
-          s"gold scan is not dir-targeted: $roots")
-        val listedBuckets = roots
-          .map(_.stripPrefix(s"${IncrementalGold.BucketCol}=").toInt).toSet
-        assert(listedBuckets == expectBuckets && listedBuckets.size < nBuckets,
-          s"expected buckets $expectBuckets of $nBuckets, scan lists $listedBuckets")
+      val offenders = ewsPlan.collect {
+        case e: Exchange if corpusSized(e) => e
+        case j: BaseJoinExec if corpusSized(j) && !(j.isInstanceOf[BroadcastHashJoinExec] &&
+            j.joinType.sql == "LEFT ANTI") => j
       }
-    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      assert(offenders.isEmpty,
+        s"corpus-sized stream meets an exchange or a non-anti join:\n" +
+          s"${offenders.map(_.nodeName).mkString(", ")}\n$ewsPlan")
 
-    IncrementalGold.refreshViewPruned(
-      IncrementalGold.schoolDimScope, goldPath, s"$wh/staging", nBuckets,
-      endpointFor(newSchools), affected)
-
-    // file-level pin: dynamic partition overwrite rewrote ONLY the
-    // affected buckets — every untouched partition's files are identical
-    val after = goldFiles()
-    def bucketOf(rel: String): Int =
-      rel.split("/").find(_.startsWith("scope_bucket="))
-        .map(_.stripPrefix("scope_bucket=").toInt).getOrElse(-1)
-    val untouchedBefore = before.filter { case (p, _) => !expectBuckets(bucketOf(p)) }
-    val untouchedAfter = after.filter { case (p, _) => !expectBuckets(bucketOf(p)) }
-    assert(untouchedBefore == untouchedAfter,
-      "untouched scope buckets were rewritten by the pruned refresh")
-    assert(before.keySet.filter(p => expectBuckets(bucketOf(p))) !=
-      after.keySet.filter(p => expectBuckets(bucketOf(p))),
-      "affected buckets were not rewritten")
-
-    // value law on top of the q346 hash gate: read-back ≡ full recompute
-    // over the post-CDC state
-    val got = spark.read.parquet(goldPath).drop(IncrementalGold.BucketCol)
-      .collect().map(_.toSeq).toSet
-    val want = graft.views.base.SchoolDim.build(
-      graft.views.ViewContext(spark, endpoint = endpointFor(newSchools),
+      // value law: the two-endpoint refresh ≡ full recompute over post-CDC state
+      val want = ews.view.build(ViewContext(spark, endpoint = ewsPost,
         view = n => fail(s"unexpected view dep: $n")))
-      .collect().map(_.toSeq).toSet
-    assert(got == want, "pruned refresh diverged from full recompute")
-  }
-
-  test("fully pruned incremental gold: endpoint + keymap scans carry partition filters; vacated buckets dropped") {
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    import graft.ops.IncrementalGold
-
-    val wh = java.nio.file.Files.createTempDirectory("incr-gold-endpoint").toString
-    def schoolsFrame(ids: DataFrame): DataFrame = ids.select(
-      col("id").cast("string").as("id"),
-      col("id").cast("long").as("schoolId"),
-      concat(lit("S"), col("id")).as("nameOfInstitution"),
-      lit("uri://ed-fi.org/SchoolTypeDescriptor#Regular").as("schoolTypeDescriptor"),
-      struct(lit(1L).as("localEducationAgencyId")).as("localEducationAgencyReference"),
-      array(struct(
-        lit("uri://ed-fi.org/AddressTypeDescriptor#Physical").as("addressTypeDescriptor"),
-        lit("uri://ed-fi.org/StateAbbreviationDescriptor#TX").as("stateAbbreviationDescriptor"),
-        lit("1 Main St").as("streetNumberName"),
-        lit("Metro").as("city"),
-        lit("Central").as("nameOfCounty"))).as("addresses"))
-    val lea = Seq((1L, "LEA")).toDF("localEducationAgencyId", "nameOfInstitution")
-      .withColumn("educationServiceCenterReference",
-        struct(lit(null).cast("long").as("educationServiceCenterId")))
-    val nBuckets = 16
-    val snapshot0 = schoolsFrame(spark.range(0, 2000).toDF("id"))
-    val scopeOf = (df: DataFrame) => df("schoolId")
-    IncrementalGold.writeEndpointPartitioned(
-      snapshot0, scopeOf, s"$wh/schools", nBuckets)
-    IncrementalGold.writeKeyMap(snapshot0, scopeOf, s"$wh/keymap", nBuckets)
-    def endpointOver(schools: DataFrame): String => DataFrame =
-      n => if (n == "schools") schools
-        else if (n == "localEducationAgencies") lea
-        else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          graft.core.EndpointCatalog.schema(n))
-    val goldPath = s"$wh/gold"
-    IncrementalGold.writeGoldPartitioned(
-      graft.views.base.SchoolDim.build(graft.views.ViewContext(spark,
-        endpoint = endpointOver(snapshot0),
-        view = n => fail(s"unexpected view dep: $n"))),
-      IncrementalGold.schoolDimScope, goldPath, nBuckets)
-
-    // the batch: a rename, a RE-KEY (id 5 moves to scope 9005 — only the
-    // keymap knows scope 5 is vacated), and deletes that empty a WHOLE
-    // bucket (every scope hashing to the first school's bucket) — the
-    // ADVICE r11 hole: dynamic overwrite alone never rewrites a
-    // partition absent from the output
-    val bucketOfScope = (spark.range(0, 2000).toDF("id")
-        union Seq(9005L).toDF("id"))
-      .select(col("id"),
-        IncrementalGold.scopeBucket(col("id").cast("string"), nBuckets).as("b"))
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    // a bucket holding neither the renamed id 7, the re-keyed id 5, nor
-    // the re-key's landing scope 9005 — deleting all its scopes must
-    // leave it with zero rows
-    val keep = Set(bucketOfScope(5L), bucketOfScope(7L), bucketOfScope(9005L))
-    val emptiedBucket = (0 until nBuckets).find(b => !keep(b)).get
-    val emptied = bucketOfScope.collect {
-      case (id, b) if b == emptiedBucket && id != 9005L => id
-    }.toSeq
-    assert(emptied.size > 50, "fixture: bucket unexpectedly sparse")
-    val upserts = schoolsFrame(Seq(7L).toDF("id"))
-      .withColumn("nameOfInstitution", concat(col("nameOfInstitution"), lit("!")))
-      .unionByName(schoolsFrame(Seq(5L).toDF("id"))
-        .withColumn("schoolId", lit(9005L)))
-    val delIds = emptied.toDF("x").select(col("x").cast("string").as("id"))
-    val batch = IncrementalGold.CdcBatch(upserts, delIds)
-
-    // fully pruned affected-scope set: vacated scopes (5 and the emptied
-    // bucket's) come from the keymap's id-buckets, not a corpus scan
-    val affected = IncrementalGold.batchScopesPruned(
-      spark, s"$wh/keymap", nBuckets, batch, scopeOf)
-    val affSet = affected.collect().map(_.getString(0)).toSet
-    assert(affSet.contains("5") && affSet.contains("9005") &&
-      affSet.contains("7") && emptied.forall(i => affSet.contains(i.toString)),
-      s"keymap scope recovery incomplete: $affSet")
-
-    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      // physical pin 1: the keymap lookup scan is dir-targeted — its
-      // file index holds only the wanted ids' bucket directories
-      val look = IncrementalGold.lookupScopes(
-        spark, s"$wh/keymap", nBuckets, upserts.select(col("id")))
-      val kScans = look.queryExecution.executedPlan.collect {
-        case f: FileSourceScanExec
-            if f.relation.location.rootPaths.exists(_.toString.contains("/keymap")) => f
-      }
-      assert(kScans.nonEmpty, "keymap scan missing from the lookup")
-      kScans.foreach { f =>
-        val roots = f.relation.location.rootPaths.map(_.getName)
-        assert(roots.forall(_.startsWith(s"${IncrementalGold.IdBucketCol}=")) &&
-          roots.size < nBuckets,
-          s"keymap lookup not dir-targeted (${roots.size} of $nBuckets): $roots")
-      }
-
-      // physical pin 2: in the merge, BOTH the gold scan and the scoped
-      // ENDPOINT scan are dir-targeted — the r11 gap was endpoint scans
-      // reading (and listing) the whole corpus
-      val postCdc = IncrementalGold.postCdcSlicePruned(
-        spark, s"$wh/schools", nBuckets, batch, affected)
-      val merged = IncrementalGold.prunedMerge(
-        IncrementalGold.schoolDimScope, goldPath, nBuckets,
-        endpointOver(postCdc), affected)
-      val scans = merged.queryExecution.executedPlan.collect {
-        case f: FileSourceScanExec => f
-      }
-      def scansUnder(dir: String) = scans.filter(
-        _.relation.location.rootPaths.exists(_.toString.contains(dir)))
-      Seq("/gold", "/schools").foreach { dir =>
-        val ss = scansUnder(dir)
-        assert(ss.nonEmpty, s"$dir scan missing from the pruned merge")
-        ss.foreach { f =>
-          val roots = f.relation.location.rootPaths.map(_.getName)
-          assert(roots.forall(_.startsWith(s"${IncrementalGold.BucketCol}=")) &&
-            roots.size < nBuckets,
-            s"$dir scan not dir-targeted (${roots.size} of $nBuckets): $roots")
-        }
-      }
+      assert(ewsMerged.collect().map(_.toSeq).toSet == want.collect().map(_.toSeq).toSet,
+        "EWS incremental refresh diverged from full recompute")
     } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
-
-    // the full pruned production loop: endpoint, keymap, then gold
-    IncrementalGold.refreshEndpointPartitioned(
-      spark, s"$wh/schools", s"$wh/stage-ep", nBuckets, batch, scopeOf, affected)
-    IncrementalGold.refreshKeyMap(
-      spark, s"$wh/keymap", s"$wh/stage-km", nBuckets, batch, scopeOf)
-    IncrementalGold.refreshViewPruned(
-      IncrementalGold.schoolDimScope, goldPath, s"$wh/stage-gold", nBuckets,
-      endpointOver(IncrementalGold.readEndpointPruned(
-        spark, s"$wh/schools", nBuckets, affected)),
-      affected)
-
-    // file-level pin: the emptied bucket's partition directory is GONE
-    // from gold and from the endpoint snapshot (ADVICE r11 — stale files
-    // must not survive a bucket-vacating batch)
-    Seq(goldPath, s"$wh/schools").foreach { p =>
-      val dir = java.nio.file.Paths.get(
-        p, s"${IncrementalGold.BucketCol}=$emptiedBucket")
-      assert(!java.nio.file.Files.exists(dir),
-        s"vacated bucket dir survived the pruned refresh: $dir")
-    }
-
-    // value law: endpoint, keymap and gold read-backs all equal a full
-    // recompute over the post-CDC snapshot
-    val wantSnapshot = IncrementalGold.applyCdc(snapshot0, batch)
-    val gotSnapshot = spark.read.parquet(s"$wh/schools")
-      .drop(IncrementalGold.BucketCol)
-    assert(gotSnapshot.collect().map(_.toSeq).toSet ==
-      wantSnapshot.collect().map(_.toSeq).toSet,
-      "pruned endpoint refresh diverged from applyCdc")
-    val wantKeys = wantSnapshot.select(col("id").cast("string"),
-      col("schoolId").cast("string")).collect().map(_.toSeq).toSet
-    val gotKeys = spark.read.parquet(s"$wh/keymap")
-      .select(col("id"), col("scope")).collect().map(_.toSeq).toSet
-    assert(gotKeys == wantKeys, "pruned keymap refresh diverged")
-    val want = graft.views.base.SchoolDim.build(
-      graft.views.ViewContext(spark, endpoint = endpointOver(wantSnapshot),
-        view = n => fail(s"unexpected view dep: $n")))
-      .collect().map(_.toSeq).toSet
-    val got = spark.read.parquet(goldPath).drop(IncrementalGold.BucketCol)
-      .collect().map(_.toSeq).toSet
-    assert(got == want, "fully pruned refresh diverged from full recompute")
-  }
-
-  test("fully pruned EWS merge: both scoped endpoint scans AND the gold scan are dir-targeted") {
-    // r13 migration pin (VERDICT r12 item 3) for the MULTI-endpoint scopes
-    // behind q341/q344: in one pruned merge, the gold scan and EVERY
-    // scoped endpoint scan (enrollment spine + attendance events) hold
-    // only the affected buckets' directories; the calendar is a shared
-    // dimension and passes whole. Value law on top: the full pruned loop
-    // lands exactly the full-recompute state.
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    import graft.ops.IncrementalGold
-    import graft.views.ViewContext
-
-    val wh = java.nio.file.Files.createTempDirectory("incr-gold-ews").toString
-    def ssaRows(ids: DataFrame): DataFrame = ids.select(
-      col("id").cast("string").as("id"),
-      struct((col("id") % 5).as("schoolId")).as("schoolReference"),
-      struct(lit(1995L).as("schoolYear")).as("schoolYearTypeReference"),
-      struct(col("id").cast("string").as("studentUniqueId")).as("studentReference"),
-      lit("1995-01-05").as("entryDate"),
-      lit(null).cast("string").as("exitWithdrawDate"))
-    def attRows(ids: DataFrame, gen: String): DataFrame = ids.select(
-      concat(lit(gen), col("id").cast("string")).as("id"),
-      struct((col("id") % 5).as("schoolId")).as("schoolReference"),
-      struct(col("id").cast("string").as("studentUniqueId")).as("studentReference"),
-      lit("1995-01-10").as("eventDate"),
-      lit("uri://ed-fi.org/AttendanceEventCategoryDescriptor#Tardy")
-        .as("attendanceEventCategoryDescriptor"))
-    val cal = spark.range(0, 5).select(
-      struct(col("id").as("schoolId"), lit(1995L).as("schoolYear"))
-        .as("calendarReference"),
-      lit("1995-01-10").as("date"),
-      array(struct(lit("uri://ed-fi.org/CalendarEventDescriptor#Instructional day")
-        .as("calendarEventDescriptor"))).as("calendarEvents"))
-    def emptyEp(n: String) = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      graft.core.EndpointCatalog.schema(n))
-
-    val nBuckets = 16
-    val ids = spark.range(0, 2000).toDF("id")
-    val ssa = ssaRows(ids)
-    val att = attRows(ids, "a-")
-    val scope = IncrementalGold.ewsFactScope
-    val studentOf = (df: DataFrame) => df("studentReference.studentUniqueId")
-    IncrementalGold.writeEndpointPartitioned(ssa, studentOf, s"$wh/ssa_p", nBuckets)
-    IncrementalGold.writeEndpointPartitioned(att, studentOf, s"$wh/att_p", nBuckets)
-    IncrementalGold.writeKeyMap(ssa, studentOf, s"$wh/km", nBuckets)
-    def epOver(s: DataFrame, a: DataFrame): String => DataFrame = {
-      case "studentSchoolAssociations" => s
-      case "studentSchoolAttendanceEvents" => a
-      case "calendarDates" => cal
-      case other => emptyEp(other)
-    }
-    val oldGold = scope.view.build(ViewContext(spark,
-      endpoint = epOver(ssa, att), view = n => fail(s"unexpected view dep: $n")))
-    IncrementalGold.writeGoldPartitioned(oldGold, scope, s"$wh/gold", nBuckets)
-
-    // fixed-size delta: new attendance for 3 students, 2 enrollment deletes
-    val attUpserts = attRows(spark.range(0, 3).toDF("id"), "b-")
-    val ssaDelIds = spark.range(100, 102).select(col("id").cast("string").as("id"))
-    val attBatch = IncrementalGold.CdcBatch(attUpserts, att.select(col("id")).limit(0))
-    val ssaBatch = IncrementalGold.CdcBatch(ssa.limit(0), ssaDelIds)
-    val affected = attUpserts
-      .select(studentOf(attUpserts).cast("string").as("scope"))
-      .unionByName(IncrementalGold.batchScopesPruned(
-        spark, s"$wh/km", nBuckets, ssaBatch, studentOf))
-      .distinct().localCheckpoint(true)
-
-    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      val merged = IncrementalGold.prunedMerge(
-        scope, s"$wh/gold", nBuckets,
-        epOver(
-          IncrementalGold.postCdcSlicePruned(
-            spark, s"$wh/ssa_p", nBuckets, ssaBatch, affected),
-          IncrementalGold.postCdcSlicePruned(
-            spark, s"$wh/att_p", nBuckets, attBatch, affected)),
-        affected)
-      val scans = merged.queryExecution.executedPlan.collect {
-        case f: FileSourceScanExec => f
-      }
-      Seq("/gold", "/ssa_p", "/att_p").foreach { dir =>
-        val ss = scans.filter(
-          _.relation.location.rootPaths.exists(_.toString.contains(dir)))
-        assert(ss.nonEmpty, s"$dir scan missing from the pruned EWS merge")
-        ss.foreach { f =>
-          val roots = f.relation.location.rootPaths.map(_.getName)
-          assert(roots.forall(_.startsWith(s"${IncrementalGold.BucketCol}=")) &&
-            roots.size < nBuckets,
-            s"$dir scan not dir-targeted (${roots.size} of $nBuckets): $roots")
-        }
-      }
-    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
-
-    // value law: the full pruned loop ≡ full recompute over post-CDC state
-    IncrementalGold.refreshEndpointPartitioned(
-      spark, s"$wh/ssa_p", s"$wh/st-ssa", nBuckets, ssaBatch, studentOf, affected)
-    IncrementalGold.refreshEndpointPartitioned(
-      spark, s"$wh/att_p", s"$wh/st-att", nBuckets, attBatch, studentOf, affected)
-    IncrementalGold.refreshViewPruned(
-      scope, s"$wh/gold", s"$wh/st-gold", nBuckets,
-      epOver(
-        IncrementalGold.readEndpointPruned(spark, s"$wh/ssa_p", nBuckets, affected),
-        IncrementalGold.readEndpointPruned(spark, s"$wh/att_p", nBuckets, affected)),
-      affected)
-    val got = spark.read.parquet(s"$wh/gold").drop(IncrementalGold.BucketCol)
-      .collect().map(_.toSeq).toSet
-    val want = scope.view.build(ViewContext(spark,
-      endpoint = epOver(
-        IncrementalGold.applyCdc(ssa, ssaBatch),
-        IncrementalGold.applyCdc(att, attBatch)),
-      view = n => fail(s"unexpected view dep: $n")))
-      .collect().map(_.toSeq).toSet
-    assert(got == want, "fully pruned EWS refresh diverged from full recompute")
   }
 
   test("media catalog: exchange-free routing and census; probe pays ONE batch-sized exchange") {
