@@ -5,10 +5,9 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** Small-file compaction for parquet directories — the maintenance pass a
-  * filesystem lake needs once incremental writers exist: the streaming
-  * gold sink and per-run batch appends each land a file per partition per
-  * trigger, and at 100 TB a table read eventually spends more time opening
-  * files than scanning bytes.
+  * filesystem lake needs once writers append: each append lands a file per
+  * partition, and at 100 TB a table read eventually spends more time
+  * opening files than scanning bytes.
   *
   * Strategy: size the target partition count from the directory's actual
   * bytes (not file count), rewrite into a sibling `.compacting` directory,

@@ -39,19 +39,4 @@ final case class SilverReader(spark: SparkSession, silverRoot: String, schoolYea
     else
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
   }
-
-  /** Streaming twin of [[read]]: a file-source stream over the endpoint
-    * directory — each extraction drop (new `<endpoint>_<n>.json` file)
-    * becomes a micro-batch, so silver→gold runs incrementally
-    * (`readStream → transform → EventStreams.sinkToGold`) instead of the
-    * reference's hourly full rebuild. Same explicit schema contract as
-    * the batch path; `maxFilesPerTrigger` bounds batch size during
-    * backlog catch-up. The directory must exist (file streams cannot
-    * start on a missing path — create it at extraction setup). */
-  def readStream(endpoint: String, maxFilesPerTrigger: Int = 100): DataFrame =
-    spark.readStream
-      .schema(EndpointCatalog.schema(endpoint))
-      .option("multiLine", "true")
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(endpointDir(endpoint))
 }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.DataFrame
   * JSON array string and the text sink writes one file per partition — no
   * driver collect, so a 100 TB endpoint fans out across executors and the
   * file count tracks the partition count (pair with
-  * [[Compaction]] if an incremental extractor drips small files).
+  * [[Compaction]] when repeated drops leave many small files).
   */
 object SilverWriter {
 

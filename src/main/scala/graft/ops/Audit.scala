@@ -32,8 +32,7 @@ import org.apache.spark.sql.functions._
   *
   * Gated by q118 (DuckDB oracle states each family as plain SQL);
   * MEASURED flat at 10× data (OlapScaleProbe: 0.37 → 0.30 s — the
-  * broadcast and map-side combines absorb the volume). Streaming twin:
-  * [[graft.streaming.DocumentStreams.auditStream]]. */
+  * broadcast and map-side combines absorb the volume). */
 object Audit {
 
   /** One declarative constraint. `name` keys the report row. */

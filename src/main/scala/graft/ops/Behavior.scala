@@ -8,8 +8,7 @@ import org.apache.spark.sql.functions._
   * counts, and cohort retention over an append-only event log. The
   * reference pipeline stops at attendance/grade aggregates; these are
   * the product-analytics operators the same event-shaped data feeds in
-  * a large-scale pipeline (and the batch twins of the
-  * [[graft.streaming.EventStreams]] sessionization family).
+  * a large-scale pipeline.
   *
   * Scale shape (the design constraint for all three): the event log is
   * the 100 TB side, users are the key. Every operator here does its

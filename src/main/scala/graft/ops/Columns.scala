@@ -21,30 +21,12 @@ object Columns {
   def rename(df: DataFrame, mapping: Map[String, String]): DataFrame =
     df.withColumnsRenamed(mapping)
 
-  /** `addColumnIfNotExists` — reference pandasWrapper.py:138-140.
-    * The reference conjures missing columns with a default because its JSON
-    * inputs may lack fields; with explicit schemas this is rarely needed, but
-    * union-by-name paths (O2) still use it.
-    */
-  def addIfAbsent(df: DataFrame, name: String, default: Column): DataFrame =
-    if (df.columns.contains(name)) df else df.withColumn(name, default)
-
-  /** `replace_null` — reference pandasWrapper.py:151-154 (P7); creates the
-    * column when absent, fills nulls when present. */
-  def replaceNull(df: DataFrame, name: String, default: Column): DataFrame =
-    if (!df.columns.contains(name)) df.withColumn(name, default)
-    else df.withColumn(name, coalesce(col(name), default))
-
   /** `replace_null_empty` — reference pandasWrapper.py:157-162: treats both
     * null and '' as missing. */
   def replaceNullOrEmpty(df: DataFrame, name: String, default: Column): DataFrame = {
     val base = if (df.columns.contains(name)) col(name) else lit(null)
     df.withColumn(name, when(base.isNull || base === "", default).otherwise(base))
   }
-
-  /** `copy_value_by_column` — reference pandasWrapper.py:212-216. */
-  def copyIfNull(df: DataFrame, target: String, source: String): DataFrame =
-    df.withColumn(target, coalesce(col(target), col(source)))
 
   /** `.astype(...)` (P8) applied to many columns at once. */
   def castAll(df: DataFrame, to: DataType, cols: Seq[String]): DataFrame =

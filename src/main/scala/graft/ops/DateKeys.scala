@@ -21,9 +21,6 @@ object DateKeys {
   def dateKey(c: Column): Column =
     coalesce(date_format(try_to_date(c), "yyyyMMdd"), lit(""))
 
-  /** Lenient parse (`toDateTime`, errors='ignore'): junk → null. */
-  def parseDateLenient(c: Column): Column = try_to_date(c)
-
   /** `dt.strftime` equivalents used by date_dim (reference
     * parquet/amt/base/date_dim/main.py:68-79). */
   def monthName(c: Column): Column = date_format(try_to_date(c), "MMMM")

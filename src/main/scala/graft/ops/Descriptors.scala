@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Ed-Fi descriptor-URI handling (SURVEY.md §2.6 F1-F3 and §2.3 J3/J5).
@@ -58,17 +58,5 @@ object Descriptors {
         "left"
       )
       .drop("__map_desc", "__map_code")
-  }
-
-  /** Load a descriptor-map JSON (array of {constantName, descriptor,
-    * codeValue}) as a DataFrame. */
-  def loadMap(spark: SparkSession, path: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField("constantName", StringType),
-      StructField("descriptor", StringType),
-      StructField("codeValue", StringType)
-    ))
-    spark.read.schema(schema).option("multiLine", "true").json(path)
   }
 }

@@ -50,23 +50,6 @@ object LanguageModel {
       (a, b) => concat(a, lit(" "), b))
   }
 
-  /** LM build from an already-exploded bigram frame — the ONE copy of
-    * the (bigram, c12, c1) construction, shared by [[bigramCounts]]
-    * (standalone train) and [[bigramScore]] (train + score off one
-    * explode), so a smoothing or pruning change cannot drift between
-    * the two entry points. */
-  private def lmFromBigrams(bg: DataFrame): DataFrame = {
-    val c12 = bg.groupBy("bigram").agg(count(lit(1)).as("c12"))
-      .withColumn("w1", split(col("bigram"), " ").getItem(0))
-    val c1 = c12.groupBy("w1").agg(sum("c12").as("c1"))
-    c12.join(c1, Seq("w1")).select("bigram", "c12", "c1")
-  }
-
-  /** The trained model: (bigram, c12, c1) — pair count and left-context
-    * total. Persist/write this once per corpus snapshot. */
-  def bigramCounts(docs: DataFrame, textCol: String): DataFrame =
-    lmFromBigrams(docs.select(explode(bigrams(col(textCol))).as("bigram")))
-
   /** Score every document by mean smoothed conditional probability of
     * its bigrams under the corpus's own bigram LM. Emits `n_bigrams`
     * and `mean_condp` (null when the doc has < 2 tokens). */
@@ -88,7 +71,12 @@ object LanguageModel {
     val docBg = docs.select(col(idCol).as("__id"),
       explode(bigrams(col(textCol))).as("bigram"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val lm = lmFromBigrams(docBg)
+    // the trained model: (bigram, c12, c1) — pair count and
+    // left-context total
+    val c12 = docBg.groupBy("bigram").agg(count(lit(1)).as("c12"))
+      .withColumn("w1", split(col("bigram"), " ").getItem(0))
+    val c1 = c12.groupBy("w1").agg(sum("c12").as("c1"))
+    val lm = c12.join(c1, Seq("w1")).select("bigram", "c12", "c1")
     val vocabSize = docs
       .select(explode(TextAnalysis.tokens(col(textCol))).as("w"))
       .agg(countDistinct("w").as("v"))

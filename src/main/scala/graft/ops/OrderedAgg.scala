@@ -21,7 +21,9 @@ import org.apache.spark.sql.functions._
 object OrderedAgg {
 
   /** Expression form: `string_agg(value, sep ORDER BY sortKeys…)`.
-    * Descending keys: pass the column wrapped by [[descNum]] below.
+    * Descending keys: negate numeric keys (strings have no cheap
+    * order-reversal, so give a string key a numeric surrogate first,
+    * e.g. a dateKey cast to long).
     *
     * The value itself is the last struct field, so ties on the sort keys
     * fall back to ordering by value — fully deterministic even when sort
@@ -35,12 +37,6 @@ object OrderedAgg {
       sep
     )
   }
-
-  /** Encode a descending sort key for [[stringAgg]]'s struct ordering.
-    * Numeric/date keys negate; strings have no cheap order-reversal, so for
-    * string keys prefer a numeric surrogate (e.g. a dateKey cast to long).
-    */
-  def descNum(c: Column): Column = -c
 
   /** DataFrame form used by the views. */
   def apply(

@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
   * `changed` (content hash differs), omitting the unchanged majority.
   * This is the primitive behind incremental downstream work: a daily
   * 100 TB corpus refresh re-deduplicates / re-scores / re-embeds ONLY
-  * the diff (compose with [[Dedup.incrementalMinhash]] and the
-  * streaming gates), never the full table.
+  * the diff (compose with [[Dedup.incrementalMinhash]]), never the full
+  * table.
   *
   * Scale shape: each side folds its content columns to one md5
   * map-side, so the full-outer join shuffles (key, 16-byte hash) —

@@ -222,9 +222,9 @@ object WebGraph {
 
   /** [[hostRank]] warm-started from a previous rank state — the daily
     * refresh path: after folding the day's edge deltas into the graph
-    * (e.g. [[graft.streaming.DocumentStreams.linkEdgesStream]] output),
-    * re-ranking from yesterday's state carries over all the contraction
-    * those rounds already paid for. The damping factor shrinks the gap
+    * (e.g. a [[hostEdges]] aggregate over the day's crawl), re-ranking
+    * from yesterday's state carries over all the contraction those
+    * rounds already paid for. The damping factor shrinks the gap
     * to the fixed point 0.85× per round from WHATEVER starting state,
     * so k warm rounds land where (seed-depth + k) cold rounds would —
     * WebGraphSpec pins the claim as a ratio: after an edge delta, 2

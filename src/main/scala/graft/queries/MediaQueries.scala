@@ -1228,7 +1228,7 @@ object MediaQueries {
     * building binaries in-flight: real files land in a directory with
     * the lake naming convention (`<id>.<ext>`, BMP for even ids, PNG
     * for odd), `spark.read.format("binaryFile")` picks them up through
-    * the same glob the streaming twin uses, doc_id comes from the file
+    * an image-extension glob, doc_id comes from the file
     * name, and the decode → resize → channel-means chain runs on the
     * bytes THE FILESYSTEM handed back. Junk drops are covered both
     * ways: a `.txt` file the glob must exclude, and a text-bytes

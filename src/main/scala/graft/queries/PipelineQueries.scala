@@ -2870,7 +2870,7 @@ object PipelineQueries {
     * applies it anti-join-style, and summarizes survivors per bucket so
     * an off-by-one in the anti join shifts counts, mins AND char sums.
     * The end-to-end wiring (stub ODS → silver `/deletes` twin → gold
-    * reflects removals, diffSummary audit) runs in StreamingSpec. */
+    * reflects removals, diffSummary audit) runs in OpsSpec. */
   private val q97 = Q(
     "q97_cdc_deletes",
     (s, dir) => {

@@ -652,9 +652,8 @@ object RelationalQueries {
   )
 
   // ---------------------------------------------------------------- q24
-  /** Tumbling-window aggregation over the event stream table — the batch
-    * equivalent of the Structured Streaming path (graft.streaming); at
-    * 100 TB the group key (hour, type) keeps cardinality bounded. */
+  /** Tumbling-window aggregation over the event table; at 100 TB the
+    * group key (hour, type) keeps cardinality bounded. */
   private val q24 = Q(
     "q24_hourly_event_rollup",
     (s, dir) => {
@@ -821,9 +820,8 @@ object RelationalQueries {
   )
 
   // ---------------------------------------------------------------- q26
-  /** Sessionization via gap detection (lag window) — batch twin of the
-    * streaming flatMapGroupsWithState path: a new session starts after a
-    * 30-minute silence. One shuffle on user_id. */
+  /** Sessionization via gap detection (lag window): a new session starts
+    * after a 30-minute silence. One shuffle on user_id. */
   private val q26 = Q(
     "q26_user_sessions",
     (s, dir) => {

@@ -231,6 +231,47 @@ class OpsSpec extends SparkTestBase {
     assert(summary == Map("added" -> 1L, "removed" -> 1L, "changed" -> 1L))
   }
 
+  test("deletes feed end-to-end: stub ODS /deletes → silver → gold reflects removals") {
+    // the full incremental loop the reference never closes (it extracts
+    // /deletes but never consumes it): extract base + deletes twin from
+    // a stub ODS, land silver, build gold, apply the deletes feed, and
+    // audit the removal with diffSummary
+    import graft.ingest._
+    val t = new HttpTransport {
+      def get(url: String, headers: Map[String, String]): (Int, String) = {
+        if (!url.contains("offset="))          // root doc: version gate
+          return (200, """{"dataModels": [{"name": "Ed-Fi", "version": "4.0.0"}]}""")
+        val offset = "offset=(\\d+)".r.findFirstMatchIn(url)
+          .map(_.group(1).toInt).getOrElse(0)
+        if (offset > 0) (200, "[]")
+        else if (url.contains("/deletes"))
+          (200, """[{"id": "g2", "changeVersion": 9},
+                    {"id": "g4", "changeVersion": 11}]""")
+        else (200, (1 to 5).map(i =>
+          s"""{"id": "g$i", "studentUniqueId": "s$i", "firstName": "F$i",
+              "lastSurname": "L"}""").mkString("[", ", ", "]"))
+      }
+      def post(url: String, headers: Map[String, String],
+          form: Map[String, String]): (Int, String) =
+        (200, """{"access_token": "tok-1"}""")
+    }
+    val client = new EdFiClient(t, "http://api", "k", "s")
+    val silver = java.nio.file.Files.createTempDirectory("silver-del")
+    client.extractAll(Seq("students"), silver, "2022", parallelism = 1)
+    val reader = graft.core.SilverReader(spark, silver.toString, "2022")
+    val goldDir = java.nio.file.Files.createTempDirectory("gold-del").toString
+    reader.read("students").write.mode("overwrite").parquet(s"$goldDir/students")
+    val gold1 = spark.read.parquet(s"$goldDir/students")
+    val gold2 = graft.ops.Snapshot.applyDeletes(
+      gold1, reader.read("students_deletes"), "id")
+    assert(gold2.select("id").collect().map(_.getString(0)).sorted.toSeq ==
+      Seq("g1", "g3", "g5"))
+    val audit = graft.ops.Snapshot.diffSummary(gold1, gold2, "id",
+      Seq("studentUniqueId", "firstName", "lastSurname"))
+      .collect().map(r => (r.getString(0), r.getLong(1))).toMap
+    assert(audit == Map("removed" -> 2L))
+  }
+
   test("Snapshot.diff: content columns outside the list do not mark 'changed'") {
     val prev = Seq((1L, "body", "meta_a")).toDF("id", "text", "meta")
     val curr = Seq((1L, "body", "meta_b")).toDF("id", "text", "meta")
